@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
 
 /** Benchmark main: times every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR, prints one JSON line.
+  * SPARK_GRAFT_SF_DIR, prints two JSON lines (full, then totals).
   *
   * A small untimed warm-up (session init, parquet reader, codegen)
   * runs first so the first measured query isn't charged JVM startup;
@@ -19,10 +19,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Sessions.sfDir
     val nameFilter = args.headOption
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.fromEnv()
 
     // warm-up: JVM + codegen + parquet footer cache (untimed); the
     // bloom build warms the BloomFilterAggregate classload/codegen
@@ -63,45 +62,34 @@ object Bench {
       .filter { case (name, _) => nameFilter.forall(name.contains) }
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok =
+      val (elapsed, ok) = Sessions.timed {
         try { fn(spark, sfDir).count(); true }
         catch { case e: Throwable =>
           errors += name
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           false
         }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      // Local mode runs driver + all 32 executor threads in ONE JVM and
-      // Spark's ContextCleaner only reclaims finished queries' broadcast
-      // and shuffle state when a GC actually runs; without this nudge,
-      // late queries inherit a heap full of earlier queries' garbage and
-      // measure its collection (dedup_minhash_lsh: 38 s in a full r1
-      // sweep vs 6 s isolated). GC time here is OUTSIDE the timers —
-      // inter-query hygiene, not query cost.
-      System.gc()
+      }
       name -> (if (ok) elapsed else -1.0)
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
-    val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"sf":"$sfDir"}"""
-    println(line)
+    def line(fields: (String, Any)*) = Sessions.json(ListMap(
+      Seq("metric" -> "total", "value" -> total, "unit" -> "sec") ++ fields ++
+        Seq("errors" -> errors, "sf" -> sfDir, "cpus" -> Sessions.cpus): _*))
+    val full = line("queries" -> ListMap(results: _*))
+    println(full)
     // Also persist the full metric line: the driver's BENCH_r*.json
     // keeps only the log tail, which truncates ~100 of the per-query
     // timings (round-5 VERDICT) — the file survives intact.
     java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_latest.json"),
-      (line + "\n").getBytes("UTF-8"))
+      (full + "\n").getBytes("UTF-8"))
     // Short totals line LAST: the driver's BENCH_r*.json keeps only a
     // ~2000-char output tail, which truncates the START of the full
     // per-query line (where "value" lives) — this summary keeps every
     // round's total, count, and error list recoverable from the tail
     // alone (r6 ADVICE item 8).
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"errors":$errJson,"sf":"$sfDir"}""")
+    println(line("n_queries" -> results.size, "n_errors" -> errors.size))
     spark.stop()
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 import graft.functions.{CleanText, HtmlExtract, LongArrayMatchCount, LongVecDistSq, MaxSimScore, MinHashSig, NgramHashes, QuantizeVec, SimHash64, SimHashText, UrlCanon, VecDot, WinnowFingerprint}
 
@@ -12,46 +13,37 @@ import graft.functions.{CleanText, HtmlExtract, LongArrayMatchCount, LongVecDist
   * `SparkSession.builder().withExtensions(new GraftExtensions)`.
   */
 object GraftExtensions {
-  /** Register on an already-built session (temp functions). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("simhash64",
-      args => SimHash64(args.head), "built-in")
-    r.createOrReplaceTempFunction("simhash_text",
-      args => SimHashText(args.head), "built-in")
-    r.createOrReplaceTempFunction("ngram_hashes",
-      args => NgramHashes(args.head, GraftExtensions.litInt(args(1))), "built-in")
-    r.createOrReplaceTempFunction("winnow_fingerprint",
-      args => WinnowFingerprint(args.head, litInt(args(1)), litInt(args(2))), "built-in")
-    r.createOrReplaceTempFunction("vec_dot",
-      args => VecDot(args.head, args(1)), "built-in")
-    r.createOrReplaceTempFunction("minhash_sig",
-      args => MinHashSig(args.head, litInt(args(1))), "built-in")
-    r.createOrReplaceTempFunction("long_array_match_count",
-      args => LongArrayMatchCount(args.head, args(1)), "built-in")
-    r.createOrReplaceTempFunction("clean_text",
-      args => CleanText(args.head), "built-in")
-    r.createOrReplaceTempFunction("maxsim_score",
-      args => MaxSimScore(args.head, args(1), litInt(args(2))), "built-in")
-    r.createOrReplaceTempFunction("quantize_vec",
-      args => QuantizeVec(args.head, litInt(args(1))), "built-in")
-    r.createOrReplaceTempFunction("longvec_dist_sq",
-      args => LongVecDistSq(args.head, args(1)), "built-in")
-  }
+  /** Every graft SQL function: name → builder over the call's argument
+    * expressions. Both [[register]] and the session extension read it.
+    */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("simhash64", a => SimHash64(a.head)),
+    ("simhash_text", a => SimHashText(a.head)),
+    ("ngram_hashes", a => NgramHashes(a.head, intArg(a(1)))),
+    ("winnow_fingerprint", a => WinnowFingerprint(a.head, intArg(a(1)), intArg(a(2)))),
+    ("vec_dot", a => VecDot(a.head, a(1))),
+    ("minhash_sig", a => MinHashSig(a.head, intArg(a(1)))),
+    ("long_array_match_count", a => LongArrayMatchCount(a.head, a(1))),
+    ("clean_text", a => CleanText(a.head)),
+    ("maxsim_score", a => MaxSimScore(a.head, a(1), intArg(a(2)))),
+    ("quantize_vec", a => QuantizeVec(a.head, intArg(a(1)))),
+    ("longvec_dist_sq", a => LongVecDistSq(a.head, a(1))),
+    ("html_extract", a => HtmlExtract(a.head)),
+    ("url_canon", a => UrlCanon(a.head)))
 
-  private[graft] def litInt(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+  /** Register on an already-built session (temp functions). */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    functions.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
+
+  private def intArg(e: Expression): Int = e match {
+    case Literal(v: Int, _) => v
     case other => throw new IllegalArgumentException(s"expected int literal, got $other")
   }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def lit(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(s"expected int literal, got $other")
-  }
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
     // year(d)-predicate sargability — see SargableTimeRewrite scaladoc
@@ -61,57 +53,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // aggregate navigator: fact rollups retarget onto registered
     // materialized pre-aggregates (see MvRewrite scaladoc)
     ext.injectOptimizerRule(_ => graft.plans.MvRewrite)
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("simhash64"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", "simhash64"),
-      (args: Seq[Expression]) => SimHash64(args.head)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("simhash_text"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", "simhash_text"),
-      (args: Seq[Expression]) => SimHashText(args.head)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("ngram_hashes"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", "ngram_hashes"),
-      (args: Seq[Expression]) => NgramHashes(args.head, lit(args(1)))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("winnow_fingerprint"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", "winnow_fingerprint"),
-      (args: Seq[Expression]) => WinnowFingerprint(args.head, lit(args(1)), lit(args(2)))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", "vec_dot"),
-      (args: Seq[Expression]) => VecDot(args.head, args(1))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sig"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", "minhash_sig"),
-      (args: Seq[Expression]) => MinHashSig(args.head, lit(args(1)))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("long_array_match_count"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", "long_array_match_count"),
-      (args: Seq[Expression]) => LongArrayMatchCount(args.head, args(1))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("clean_text"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", "clean_text"),
-      (args: Seq[Expression]) => CleanText(args.head)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("maxsim_score"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", "maxsim_score"),
-      (args: Seq[Expression]) => MaxSimScore(args.head, args(1), lit(args(2)))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("quantize_vec"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", "quantize_vec"),
-      (args: Seq[Expression]) => QuantizeVec(args.head, lit(args(1)))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("longvec_dist_sq"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", "longvec_dist_sq"),
-      (args: Seq[Expression]) => LongVecDistSq(args.head, args(1))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("html_extract"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", "html_extract"),
-      (args: Seq[Expression]) => HtmlExtract(args.head)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("url_canon"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", "url_canon"),
-      (args: Seq[Expression]) => UrlCanon(args.head)))
+    GraftExtensions.functions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft", name), builder))
+    }
   }
 }

@@ -6,16 +6,17 @@ import java.nio.file.{Files, Paths}
   * or more queries to files — `plans/<round>/<query>_{before,after}.txt`.
   *
   * Usage: runMain graft.PlanDump <round> <suffix> <query> [query ...]
-  *   writes plans/<round>/<query>_<suffix>.txt for each query at sf0.1
-  *   (the bench scale — the plans the optimization claims are about).
+  *   writes plans/<round>/<query>_<suffix>.txt for each query on
+  *   SPARK_GRAFT_SF_DIR (default sf0.1, the bench scale — the plans the
+  *   optimization claims are about).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <round> <suffix> <query> [query ...]")
     val round = args(0)
     val suffix = args(1)
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val dir = Sessions.sfDir
+    val spark = Sessions.fromEnv()
     Files.createDirectories(Paths.get(s"plans/$round"))
     args.drop(2).foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

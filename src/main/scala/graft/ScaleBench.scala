@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
 /** Measured time-vs-scale curves for the iterative heavies — r12
   * verdict item 1: every 100 TB claim in SCALE.md was argued from
   * plan shapes; this main MEASURES the slopes. It synthesizes 1×/2×/4×
@@ -28,17 +30,12 @@ import org.apache.spark.sql.functions._
   *    scale k×.
   *
   * Usage: SPARK_GRAFT_SF_DIR=<fixture> sbt "runMain graft.ScaleBench [runs]"
+  * (the fixture defaults to sf0.1, like every measuring main)
   * Prints one JSON line per (op, scale, run) and a fitted-slope
   * summary (per-doubling exponent log2(t4/t1)/2 over median times;
   * ~1.0 = linear; anything clearly super-linear is a found bug).
   */
 object ScaleBench {
-
-  private def timed[T](f: => T): (Double, T) = {
-    val t0 = System.nanoTime()
-    val r = f
-    ((System.nanoTime() - t0) / 1e9, r)
-  }
 
   /** k disjoint node-id-shifted copies of the supplier↔customer
     * edge frame (the pagerank_supplier_customer build).
@@ -149,19 +146,21 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val sfDir = Sessions.sfDir
     val runs = args.headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.fromEnv()
     val scales = Seq(1, 2, 4)
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int, Double, Long)]
+    def median(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
+    // fixed decimals, printed as `f"%.Nf"` would print them
+    def round(x: Double, places: Int) = BigDecimal(x).setScale(places, BigDecimal.RoundingMode.HALF_UP)
 
     def record(op: String, scale: Int, sizeRows: Long)(body: => Long): Unit = {
       (1 to runs).foreach { r =>
-        val (sec, n) = timed(body)
+        val (sec, n) = Sessions.timed(body)
         results += ((op, scale, r, sec, n))
-        println(f"""{"op":"$op","scale":$scale,"run":$r,"sec":$sec%.3f,"rows":$n,"input_rows":$sizeRows}""")
-        System.gc() // Bench convention: collection outside the timers
+        println(Sessions.json(ListMap("op" -> op, "scale" -> scale, "run" -> r,
+          "sec" -> round(sec, 3), "rows" -> n, "input_rows" -> sizeRows)))
       }
     }
 
@@ -259,18 +258,19 @@ object ScaleBench {
     }
 
     // fitted per-doubling exponents over per-scale MEDIANS
-    def median(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
     val summary = results.groupBy(_._1).toSeq.sortBy(_._1).map { case (op, rows) =>
       val med = scales.map(k => k -> median(rows.filter(_._2 == k).map(_._4).toSeq)).toMap
       val slope = math.log(med(4) / med(1)) / math.log(2.0) / 2.0
-      f""""$op":{"t1":${med(1)}%.2f,"t2":${med(2)}%.2f,"t4":${med(4)}%.2f,"per_doubling_exp":$slope%.2f}"""
-    }.mkString("{", ",", "}")
-    val line = s"""{"metric":"scale_curves","sf":"$sfDir","runs":$runs,"ops":$summary}"""
+      op -> ListMap("t1" -> round(med(1), 2), "t2" -> round(med(2), 2),
+        "t4" -> round(med(4), 2), "per_doubling_exp" -> round(slope, 2))
+    }
+    val line = Sessions.json(ListMap("metric" -> "scale_curves", "sf" -> sfDir,
+      "runs" -> runs, "ops" -> ListMap(summary: _*)))
     println(line)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"scale_curves_${new java.io.File(sfDir).getName}.json"),
       (results.map { case (op, k, r, sec, n) =>
-        f"""{"op":"$op","scale":$k,"run":$r,"sec":$sec%.3f,"rows":$n}"""
+        Sessions.json(ListMap("op" -> op, "scale" -> k, "run" -> r, "sec" -> round(sec, 3), "rows" -> n))
       }.mkString("", "\n", "\n") + line + "\n").getBytes("UTF-8"))
     spark.stop()
   }

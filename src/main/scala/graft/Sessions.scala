@@ -13,6 +13,9 @@ import org.apache.spark.sql.SparkSession
   *   TIMESTAMP(NANOS) which Spark 4 otherwise refuses to read;
   *   [[Tables.events]] converts the long back to a microsecond
   *   timestamp.
+  *
+  * The measuring mains (Bench, IsoBench, PlanDump, ScaleBench, Verify)
+  * also take their environment, timer and JSON output from here.
   */
 object Sessions {
   def local(cpus: String): SparkSession = {
@@ -27,5 +30,59 @@ object Sessions {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** `SPARK_GRAFT_CPUS`, defaulting to the JVM's available processors. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** `SPARK_GRAFT_SF_DIR`: the fixture the measuring mains read. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The measuring mains' session: [[local]] at [[cpus]] threads. */
+  def fromEnv(): SparkSession = local(cpus.toString)
+
+  /** Wall seconds of `body`, then a `System.gc()` OUTSIDE the timed
+    * interval. Local mode runs driver and executors in one JVM, and
+    * Spark's ContextCleaner reclaims finished queries' broadcast and
+    * shuffle state only when a GC runs: without this, later
+    * measurements pay for earlier ones' garbage (dedup_minhash_lsh:
+    * 38 s in a full sweep vs 6 s isolated).
+    */
+  def timed[T](body: => T): (Double, T) = {
+    val t0 = System.nanoTime()
+    val r = body
+    val sec = (System.nanoTime() - t0) / 1e9
+    System.gc()
+    (sec, r)
+  }
+
+  /** A JSON string literal: quote, backslash and EVERY control char
+    * below 0x20 escaped — a tab or CR in query-authored SQL would
+    * otherwise make the reader's `json.load` of oracle_sql.json fail.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** JSON text of `v`: a `Map` is an object in its iteration order
+    * (`ListMap` keeps field order), any other collection an array, a
+    * string a [[jsonString]], anything else its `toString` (numbers).
+    * `colon` separates keys from values: Verify's oracle_sql.json keeps
+    * its historical `": "`, the bench lines are compact.
+    */
+  def json(v: Any, colon: String = ":"): String = v match {
+    case s: String => jsonString(s)
+    case m: collection.Map[_, _] =>
+      m.map { case (k, x) => jsonString(k.toString) + colon + json(x, colon) }
+        .mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(json(_, colon)).mkString("[", ",", "]")
+    case x => x.toString
   }
 }

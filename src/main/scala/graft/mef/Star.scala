@@ -77,6 +77,55 @@ object Star {
     */
   val DimWindowMaxRows: Long = 1L << 20
 
+  /** Early consolidation: ONE map-side-combining groupBy at the
+    * natural grain (time + every dim attribute column) collapses the
+    * raw stream to grain cardinality BEFORE any dim build or FK join.
+    * At 100 TB this is the load-bearing choice: the only full-width
+    * shuffle carries pre-aggregated rows; dims and FK resolution then
+    * operate on the (bounded) grain, not the fact stream.
+    *
+    * The grain materializes lineage-TRUNCATED (localCheckpoint = the
+    * local-mode analog of the loader writing the consolidated batch to
+    * the warehouse): persist() would cache the data, but the 7 dim
+    * builds + the fact resolution would still re-analyze the whole
+    * scan+clean+Transform subtree 8 times; the checkpoint plans them
+    * against a shallow table scan.
+    */
+  private def consolidateGrain(normalized: DataFrame): DataFrame = {
+    val grainCols = ("ano_eje" +: "mes_eje" +: MefSchema.dims.flatMap(_.allCols)).distinct
+    val preAggs = MefSchema.measures.map(m => sum(col(m)).as(m))
+    normalized
+      .groupBy(grainCols.map(col): _*)
+      .agg(preAggs.head, preAggs.tail: _*)
+      .localCheckpoint()
+  }
+
+  /** J3: one row per distinct natural key of `spec`, with the
+    * deterministic representative attributes (the lexicographically
+    * smallest attribute tuple).
+    */
+  private def distinctKeys(frame: DataFrame, spec: DimSpec): DataFrame = {
+    val attrCols = spec.allCols.filterNot(spec.keys.contains)
+    val keyCols = spec.keys.map(col)
+    if (attrCols.isEmpty) frame.select(keyCols: _*).distinct()
+    else frame
+      .groupBy(keyCols: _*)
+      .agg(min(struct(attrCols.map(col): _*)).as("_attrs"))
+      .select(keyCols ++ attrCols.map(a => col(s"_attrs.$a").as(a)): _*)
+  }
+
+  /** `f` over every dim spec as concurrent futures, so the per-dim
+    * materializations don't serialize into 7 cluster-wide barriers.
+    */
+  private def perDim(f: DimSpec => DataFrame): Map[String, DataFrame] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    Await.result(
+      Future.traverse(MefSchema.dims)(spec => Future(spec.name -> f(spec))),
+      Duration.Inf).toMap
+  }
+
   /** One attribute dimension: distinct natural keys, deterministic
     * representative attributes, dense surrogate id.
     *
@@ -93,15 +142,7 @@ object Star {
   def buildDim(
       normalized: DataFrame, spec: DimSpec,
       windowMaxRows: Long = DimWindowMaxRows): DataFrame = {
-    val attrCols = spec.allCols.filterNot(spec.keys.contains)
-    val keyCols = spec.keys.map(col)
-    val dedup =
-      if (attrCols.isEmpty) normalized.select(keyCols: _*).distinct()
-      else normalized
-        .groupBy(keyCols: _*)
-        .agg(min(struct(attrCols.map(col): _*)).as("_attrs"))
-        .select(keyCols ++ attrCols.map(a => col(s"_attrs.$a").as(a)): _*)
-    val snapped = dedup.localCheckpoint()
+    val snapped = distinctKeys(normalized, spec).localCheckpoint()
     val n = snapped.count()
     val withId =
       if (n <= windowMaxRows)
@@ -122,44 +163,18 @@ object Star {
     * FK-resolved, FK-complete, grain-consolidated fact.
     */
   def build(spark: SparkSession, normalizedIn: DataFrame): StarSchema = {
-    // Early consolidation: ONE map-side-combining groupBy at the
-    // natural grain (time + every dim attribute column) collapses the
-    // raw stream to grain cardinality BEFORE any dim build or FK join.
-    // At 100 TB this is the load-bearing choice: the only full-width
-    // shuffle carries pre-aggregated rows; dims and FK resolution then
-    // operate on the (bounded) grain, not the fact stream. The final
-    // groupBy(fks) below still consolidates any residual duplicates
-    // (e.g. same natural key with inconsistent attributes), so
-    // semantics equal the reference's per-batch A1 + unique-grain sink.
-    val grainCols = ("ano_eje" +: "mes_eje" +: MefSchema.dims.flatMap(_.allCols)).distinct
-    val preAggs = MefSchema.measures.map(m => sum(col(m)).as(m))
-    // The grain materializes lineage-TRUNCATED (localCheckpoint = the
-    // local-mode analog of the loader writing the consolidated batch
-    // to the warehouse): 7 dim builds + the fact resolution all plan
-    // against a shallow table scan instead of re-embedding (and
-    // re-analyzing) the whole scan+clean+Transform subtree 8 times.
-    val normalized = normalizedIn
-      .groupBy(grainCols.map(col): _*)
-      .agg(preAggs.head, preAggs.tail: _*)
-      .localCheckpoint()
+    // The final groupBy(fks) in resolveFact still consolidates any
+    // residual duplicates (e.g. same natural key with inconsistent
+    // attributes), so semantics equal the reference's per-batch A1 +
+    // unique-grain sink.
+    val normalized = consolidateGrain(normalizedIn)
     val tiempo = dimTiempo(spark)
     // Dims and the consolidated fact materialize too: the warehouse
     // contract is load-once/query-many, and without them every view or
     // analytic re-runs 7 dim builds + 7 FK joins + the final grain
     // consolidation from the grain frame. On a cluster these are the
-    // dim/fact tables a loader would write to storage. Concurrent
-    // futures keep the 7 dim materializations from serializing into 7
-    // cluster-wide barriers.
-    val dims = locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      Await.result(
-        Future.traverse(MefSchema.dims) { spec =>
-          Future { spec.name -> buildDim(normalized, spec).localCheckpoint() }
-        },
-        Duration.Inf).toMap
-    }
+    // dim/fact tables a loader would write to storage.
+    val dims = perDim(spec => buildDim(normalized, spec).localCheckpoint())
 
     val consolidated = resolveFact(normalized, tiempo, dims).localCheckpoint()
 
@@ -214,31 +229,17 @@ object Star {
     * deltas are anti-joins on bounded dims; the fact merge is a
     * left-anti join keyed on the 8-FK grain — at 100 TB each step
     * shuffles at most batch-grain or fact-grain cardinality, not raw
-    * volume. (If a dim outgrew its bounded domain, the new-key
-    * ranking window swaps for [[graft.operators.DenseId]].)
+    * volume. Fresh keys are always numbered by a single-partition
+    * `row_number` window over the batch's new keys; unlike
+    * [[buildDim]], append has no [[graft.operators.DenseId]] route.
     */
   def append(spark: SparkSession, star: StarSchema, normalizedIn: DataFrame): StarSchema = {
-    val grainCols = ("ano_eje" +: "mes_eje" +: MefSchema.dims.flatMap(_.allCols)).distinct
-    val preAggs = MefSchema.measures.map(m => sum(col(m)).as(m))
-    // Lineage-truncated like build's grain: persist() caches data but
-    // every one of the 8 downstream consumers (7 dim deltas + fact
-    // resolution) would still re-analyze the full Normalize subtree —
-    // localCheckpoint plans them against a shallow table scan.
-    val batch = normalizedIn
-      .groupBy(grainCols.map(col): _*)
-      .agg(preAggs.head, preAggs.tail: _*)
-      .localCheckpoint()
+    val batch = consolidateGrain(normalizedIn)
 
-    val newDims = MefSchema.dims.map { spec =>
+    def delta(spec: DimSpec): DataFrame = {
       val existing = star.dims(spec.name)
-      val attrCols = spec.allCols.filterNot(spec.keys.contains)
       // J3: deterministic representative attributes of the batch's keys.
-      val incoming =
-        if (attrCols.isEmpty) batch.select(spec.keys.map(col): _*).distinct()
-        else batch
-          .groupBy(spec.keys.map(col): _*)
-          .agg(min(struct(attrCols.map(col): _*)).as("_attrs"))
-          .select(spec.keys.map(col) ++ attrCols.map(a => col(s"_attrs.$a").as(a)): _*)
+      val incoming = distinctKeys(batch, spec)
       // J2: new-key detection — null-safe anti-join vs existing keys.
       val exKeys = existing.select(spec.keys.map(col): _*)
       val cond = spec.keys.map(k => incoming(k) <=> exKeys(k)).reduce(_ && _)
@@ -247,13 +248,12 @@ object Star {
       // natural key within the batch (1-row max cross-joined, J9-style,
       // so nothing collects to the driver).
       val maxId = existing.agg(coalesce(max(col(spec.id)), lit(0)).as("_max"))
-      val withIds = fresh
+      fresh
         .withColumn("_rn",
           row_number().over(Window.orderBy(spec.keys.map(k => col(k).asc_nulls_first): _*)))
         .crossJoin(broadcast(maxId))
         .select((col("_rn") + col("_max")).cast("int").as(spec.id) +: spec.allCols.map(col): _*)
-      spec.name -> withIds
-    }.toMap
+    }
 
     // Materialize the DELTAS only, lineage-truncated (the warehouse
     // contract: an append writes the delta partition, it never
@@ -263,29 +263,16 @@ object Star {
     // checkpoints its (possibly empty) delta and unions it on — a
     // saturated dim still pays one tiny checkpoint job, because the
     // alternative (an emptiness probe per dim per load) was A/B'd and
-    // costs MORE than the empty unions save (see the no-probe note
-    // below). The union-over-checkpointed-deltas lineage grows one
+    // costs MORE than the empty unions save: union with an empty
+    // checkpointed delta is free at read time, while a probe costs a
+    // job per dim per load. The union-over-checkpointed-deltas lineage grows one
     // shallow union node per load over table scans; that stays cheap
     // to ~dozens of appends, beyond which a consolidation checkpoint
     // (re-checkpoint the unioned dim, exactly like a cluster
     // compaction pass) caps it — not wired here because the MEF load
     // cadence is monthly (≤12 appends/year between full rebuilds).
-    // Concurrent futures keep the 7 delta materializations from
-    // serializing into 7 barriers.
-    val matDims = locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      Await.result(
-        Future.traverse(newDims.toSeq) { case (n, delta) =>
-          // no emptiness probe: union with an empty checkpointed
-          // delta is free at read time, while probing costs a job
-          // per dim per load (A/B'd — the probes cost more than the
-          // empty unions save)
-          Future { n -> star.dims(n).unionByName(delta.localCheckpoint()) }
-        },
-        Duration.Inf).toMap
-    }
+    val matDims = perDim(spec =>
+      star.dims(spec.name).unionByName(delta(spec).localCheckpoint()))
 
     // Resolve the batch against the grown dims, then first-write-wins
     // merge on the 8-FK grain (anti-join is safe on plain equality:

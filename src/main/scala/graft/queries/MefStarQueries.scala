@@ -72,8 +72,9 @@ object MefStarQueries {
     * pipeline_ytd, pipeline_annual); pipeline-construction COST stays
     * measured in-sweep by mef_star_incremental_ytd and
     * mef_star_append_fold, which build their own stars by design.
-    * Called from Bench only — CoreBench keeps its ETL representative
-    * cold so strong-scaling still measures the build.
+    * Called from Bench's warm list only. IsoBench's ETL representative
+    * (mef_star_incremental_ytd) builds its own star on every run, so
+    * strong-scaling still measures the build.
     */
   def warmArtifacts(s: SparkSession, dir: String): Unit = {
     starLake(s, dir)
@@ -92,7 +93,7 @@ object MefStarQueries {
   private[graft] def syntheticRaw(s: SparkSession, dir: String): DataFrame =
     syntheticRawFrom(Tables.lineitem(s, dir), s, dir)
 
-  private[queries] def syntheticRawFrom(li: DataFrame, s: SparkSession, dir: String): DataFrame =
+  private[graft] def syntheticRawFrom(li: DataFrame, s: SparkSession, dir: String): DataFrame =
     li
       .join(broadcast(Tables.supplier(s, dir)), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))

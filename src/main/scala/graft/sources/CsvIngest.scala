@@ -22,44 +22,35 @@ object CsvIngest {
     */
   val encodings: Seq[String] = Seq("UTF-8", "ISO-8859-1")
 
-  private def readAllString(spark: SparkSession, path: String, encoding: String): DataFrame = {
-    val header = spark.read
-      .option("header", "true")
-      .option("sep", ",")
-      .option("quote", "\"")
-      .option("escape", "\\")
-      .option("encoding", encoding)
-      .option("mode", "DROPMALFORMED")
+  /** Read a raw MEF CSV with encoding fallback; all columns StringType.
+    * The probe decodes the header + a 100-row sample under each candidate
+    * and rejects any decode that produced U+FFFD replacement chars. The
+    * probe already reads all-string with header, so the chosen
+    * encoding's probe names the columns of the final read's schema.
+    */
+  def apply(spark: SparkSession, path: String): DataFrame = {
+    def probe(enc: String) = spark.read
+      .option("header", "true").option("sep", ",").option("encoding", enc)
       .csv(path)
-    // force all-string schema (pandas dtype=str): re-read with explicit schema
+    val (chosen, header) = encodings.distinct.iterator.map(enc => enc -> probe(enc))
+      .find { case (_, p) =>
+        val headClean = !p.columns.exists(_.contains('�'))
+        headClean && !p.limit(100).collect().exists(_.toSeq.exists {
+          case s: String => s.contains('�')
+          case _ => false
+        })
+      }.getOrElse("ISO-8859-1" -> probe("ISO-8859-1"))
+    // force all-string schema (pandas dtype=str)
     val schema = StructType(header.columns.map(c => StructField(c, StringType, nullable = true)))
-    spark.read
+    val df = spark.read
       .option("header", "true")
       .option("sep", ",")
       .option("quote", "\"")
       .option("escape", "\\")
-      .option("encoding", encoding)
+      .option("encoding", chosen)
       .option("mode", "DROPMALFORMED")
       .schema(schema)
       .csv(path)
-  }
-
-  /** Read a raw MEF CSV with encoding fallback; all columns StringType.
-    * The probe decodes the header + a 100-row sample under each candidate
-    * and rejects any decode that produced U+FFFD replacement chars.
-    */
-  def apply(spark: SparkSession, path: String): DataFrame = {
-    val chosen = encodings.distinct.find { enc =>
-      val probe = spark.read
-        .option("header", "true").option("sep", ",").option("encoding", enc)
-        .csv(path)
-      val headClean = !probe.columns.exists(_.contains('�'))
-      headClean && !probe.limit(100).collect().exists(_.toSeq.exists {
-        case s: String => s.contains('�')
-        case _ => false
-      })
-    }.getOrElse("ISO-8859-1")
-    val df = readAllString(spark, path, chosen)
     // utf-8-sig: strip a leading BOM that survives into the first header
     val cols = df.columns
     if (cols.nonEmpty && cols.head.startsWith("﻿"))

@@ -5,6 +5,22 @@ import graft.sources.JdbcUpsertSink
 /** SQL-surface registration of custom expressions + upsert SQL shape. */
 class ExtensionsSpec extends SparkSuite {
 
+  test("register alone restores every graft SQL function") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val names = Seq("simhash64", "simhash_text", "ngram_hashes", "winnow_fingerprint",
+      "vec_dot", "minhash_sig", "long_array_match_count", "clean_text", "maxsim_score",
+      "quantize_vec", "longvec_dist_sq", "html_extract", "url_canon")
+    assert(GraftExtensions.functions.map(_._1).toSet == names.toSet)
+    val registry = spark.sessionState.functionRegistry
+    names.foreach(n => registry.dropFunction(FunctionIdentifier(n)))
+    names.foreach(n => assert(!registry.functionExists(FunctionIdentifier(n)), n))
+    GraftExtensions.register(spark)
+    names.foreach { n =>
+      val described = spark.sql(s"DESCRIBE FUNCTION $n").collect().map(_.getString(0))
+      assert(described.exists(_.contains(n)), s"$n: ${described.mkString("; ")}")
+    }
+  }
+
   test("custom expressions callable from spark.sql") {
     // extensions apply at session build normally; for an existing
     // session, register through the function registry:

@@ -215,7 +215,7 @@ class MefPipelineSpec extends SparkSuite {
     import org.apache.spark.sql.functions.col
     val dir = "/root/testdata/sf0.001"
     val typed = Transform(
-      graft.queries.MefStarQueriesProfileHook.syntheticRaw(spark, dir))
+      graft.queries.MefStarQueries.syntheticRaw(spark, dir))
       .filter(col("ANO_EJE") === 2017 && col("MES_EJE") <= 6)
       .localCheckpoint()
     val full = Star.build(spark, Normalize(typed))

@@ -61,7 +61,7 @@ class StarSkewSpec extends SparkSuite {
 
   test("Star.build stays correct when one executing unit carries half the fact") {
     val typed = Transform(
-      graft.queries.MefStarQueriesProfileHook.syntheticRawFrom(skewedLi, spark, dir))
+      graft.queries.MefStarQueries.syntheticRawFrom(skewedLi, spark, dir))
       .localCheckpoint()
     val st = Star.build(spark, Normalize(typed))
 
