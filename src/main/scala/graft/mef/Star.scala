@@ -16,10 +16,16 @@ import graft.mef.MefSchema.DimSpec
   *    deterministic across runs, unlike SERIAL insertion order. They are
   *    internal plumbing: every observable query keys on natural
   *    attributes. (The fact side never sorts. The ranking window runs on
-  *    one partition, so [[buildDim]] counts the deduped keys and routes
-  *    dims above [[DimWindowMaxRows]] through the distributed
-  *    [[graft.operators.DenseId]] numbering — identical ids, no
-  *    single-executor bottleneck when a "dimension" turns out unbounded.)
+  *    one partition; [[build]] counts the consolidated grain once, and
+  *    since no dim has more keys than the grain has rows, every dim
+  *    goes straight to the window while that count is within
+  *    [[DimWindowMaxRows]]. Only above it does each dim take
+  *    [[buildDim]]'s count probe, which routes dims past the bound
+  *    through the distributed [[graft.operators.DenseId]] numbering —
+  *    identical ids, no single-executor bottleneck when a "dimension"
+  *    turns out unbounded.)
+  *  - Each dim materializes ONCE: its deduped keys are ranked lazily
+  *    and the ranked dim is the one localCheckpoint [[build]] takes.
   *  - Attribute recovery picks the lexicographically smallest attribute
   *    tuple per natural key (deterministic stand-in for the reference's
   *    nondeterministic first-insert-wins, `etl/cargar_postgres.py:359-360`).
@@ -35,19 +41,21 @@ import graft.mef.MefSchema.DimSpec
   */
 object Star {
 
+  /** The star holds only its own tables: [[build]]'s consolidated grain
+    * is not kept, so its checkpoint blocks are freed (ContextCleaner)
+    * once the dims and fact exist.
+    */
   final case class StarSchema(
       dimTiempo: DataFrame,
       dims: Map[String, DataFrame],
-      fact: DataFrame,
-      private[mef] val source: Option[DataFrame] = None) {
+      fact: DataFrame) {
     /** Release cache-manager state for this star's frames. Frames
-      * materialized via localCheckpoint (grain/dims/fact since the
+      * materialized via localCheckpoint (dims/fact since the
       * lineage-truncation change) free their blocks when the backing
       * RDDs are GC'd; unpersist here is a harmless no-op for those but
       * still covers any persisted frames a caller composed on top.
       */
     def release(): Unit = {
-      source.foreach(_.unpersist())
       dims.values.foreach(_.unpersist())
       fact.unpersist()
     }
@@ -126,8 +134,17 @@ object Star {
       Duration.Inf).toMap
   }
 
-  /** One attribute dimension: distinct natural keys, deterministic
-    * representative attributes, dense surrogate id.
+  /** Dense surrogate ids 1..n in natural-key order (nulls first). */
+  private def keyRank(spec: DimSpec) =
+    row_number().over(Window.orderBy(spec.keys.map(k => col(k).asc_nulls_first): _*))
+
+  /** A bounded dim's ids: the single-partition ranking window. */
+  private def rankedDim(keys: DataFrame, spec: DimSpec): DataFrame =
+    keys.withColumn(spec.id, keyRank(spec)).select((spec.id +: spec.allCols).map(col): _*)
+
+  /** One attribute dimension whose size is not known to be bounded:
+    * distinct natural keys, deterministic representative attributes,
+    * dense surrogate id.
     *
     * The deduped keys materialize (localCheckpoint) and are counted so
     * the id assignment can route: bounded dims (≤ `windowMaxRows`)
@@ -136,27 +153,24 @@ object Star {
     * assigns the IDENTICAL ids (row_number over the same asc_nulls_
     * first key order — natural keys are unique post-dedup, so the
     * order is total; StarSkewSpec asserts id-for-id equality both
-    * ways). The count is one tiny job over already-checkpointed
-    * blocks; [[build]] runs it inside the per-dim concurrent futures.
+    * ways). [[build]] runs this probe only when its grain count exceeds
+    * [[DimWindowMaxRows]]; under it each dim materializes once, with
+    * no probe.
     */
   def buildDim(
       normalized: DataFrame, spec: DimSpec,
       windowMaxRows: Long = DimWindowMaxRows): DataFrame = {
     val snapped = distinctKeys(normalized, spec).localCheckpoint()
     val n = snapped.count()
-    val withId =
-      if (n <= windowMaxRows)
-        snapped.withColumn(
-          spec.id,
-          row_number().over(Window.orderBy(spec.keys.map(k => col(k).asc_nulls_first): _*)))
-      else {
-        require(n <= Int.MaxValue,
-          s"dim ${spec.name} exceeds the int surrogate-id domain ($n rows)")
-        graft.operators.DenseId.withDenseId(
-          snapped, spec.keys.map(k => col(k).asc_nulls_first), spec.id)
-          .withColumn(spec.id, col(spec.id).cast("int"))
-      }
-    withId.select((spec.id +: spec.allCols).map(col): _*)
+    if (n <= windowMaxRows) rankedDim(snapped, spec)
+    else {
+      require(n <= Int.MaxValue,
+        s"dim ${spec.name} exceeds the int surrogate-id domain ($n rows)")
+      graft.operators.DenseId.withDenseId(
+        snapped, spec.keys.map(k => col(k).asc_nulls_first), spec.id)
+        .withColumn(spec.id, col(spec.id).cast("int"))
+        .select((spec.id +: spec.allCols).map(col): _*)
+    }
   }
 
   /** Full star build from the normalized frame: all dims + the
@@ -167,18 +181,25 @@ object Star {
     // residual duplicates (e.g. same natural key with inconsistent
     // attributes), so semantics equal the reference's per-batch A1 +
     // unique-grain sink.
-    val normalized = consolidateGrain(normalizedIn)
+    val grain = consolidateGrain(normalizedIn)
     val tiempo = dimTiempo(spark)
+    // A dim has at most as many keys as the grain has rows, so one count
+    // of the checkpointed grain bounds every dim: under the window bound
+    // no dim needs buildDim's own checkpoint + count probe.
+    val bounded = grain.count() <= DimWindowMaxRows
     // Dims and the consolidated fact materialize too: the warehouse
     // contract is load-once/query-many, and without them every view or
     // analytic re-runs 7 dim builds + 7 FK joins + the final grain
     // consolidation from the grain frame. On a cluster these are the
     // dim/fact tables a loader would write to storage.
-    val dims = perDim(spec => buildDim(normalized, spec).localCheckpoint())
+    val dims = perDim { spec =>
+      val dim = if (bounded) rankedDim(distinctKeys(grain, spec), spec) else buildDim(grain, spec)
+      dim.localCheckpoint()
+    }
 
-    val consolidated = resolveFact(normalized, tiempo, dims).localCheckpoint()
+    val consolidated = resolveFact(grain, tiempo, dims).localCheckpoint()
 
-    StarSchema(tiempo, dims, consolidated, Some(normalized))
+    StarSchema(tiempo, dims, consolidated)
   }
 
   /** J1 + J4 + P4 + A1: time/FK resolution, completeness filter, grain
@@ -249,8 +270,7 @@ object Star {
       // so nothing collects to the driver).
       val maxId = existing.agg(coalesce(max(col(spec.id)), lit(0)).as("_max"))
       fresh
-        .withColumn("_rn",
-          row_number().over(Window.orderBy(spec.keys.map(k => col(k).asc_nulls_first): _*)))
+        .withColumn("_rn", keyRank(spec))
         .crossJoin(broadcast(maxId))
         .select((col("_rn") + col("_max")).cast("int").as(spec.id) +: spec.allCols.map(col): _*)
     }
@@ -285,7 +305,7 @@ object Star {
       .localCheckpoint()
     val fact = star.fact.unionByName(freshFact)
     // (checkpointed frames free their blocks when the RDDs are GC'd.)
-    StarSchema(star.dimTiempo, matDims, fact, None)
+    StarSchema(star.dimTiempo, matDims, fact)
   }
 
   /** P4 diagnostics: per-FK unresolved counts, one pass

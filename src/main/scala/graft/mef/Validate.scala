@@ -12,11 +12,13 @@ import graft.mef.Star.StarSchema
   * declaratively: every constraint becomes a counted check, one row
   * per constraint, `violations = 0` ⇔ the constraint holds.
   *
-  * Scale shape: each check is a single aggregate or anti-join keyed on
-  * the constraint's columns — the same shuffles a constraint-building
-  * index would need, run on demand instead of per-write. Dim checks
-  * run over bounded tables; the two fact checks (grain uniqueness, FK
-  * integrity) shuffle the fact once each on its 8-FK grain / FK ids.
+  * Scale shape: each check is a single aggregate, filter or anti-join
+  * keyed on the constraint's columns — the same shuffles a
+  * constraint-building index would need, run on demand instead of
+  * per-write. Dim checks run over bounded tables. All 24 checks run as
+  * ONE action: each check's violating rows, tagged with the check's
+  * index, feed one union that one `groupBy(index).count()` counts, so a
+  * validation pays one query's scheduling instead of 24.
   */
 object Validate {
 
@@ -26,37 +28,41 @@ object Validate {
   def validate(spark: SparkSession, star: StarSchema): DataFrame = {
     import spark.implicits._
 
-    def dup(df: DataFrame, cols: Seq[String]): Long =
-      df.groupBy(cols.map(col): _*).count().filter(col("count") > 1).count()
+    def dupGroups(df: DataFrame, cols: Seq[String]): DataFrame =
+      df.groupBy(cols.map(col): _*).count().filter(col("count") > 1)
 
+    def dangling(fk: String, dim: DataFrame): DataFrame =
+      star.fact.select(col(fk)).join(dim.select(col(fk)), Seq(fk), "left_anti")
+
+    // (table, constraint, violating rows), in the reported order
     val factChecks = Seq(
-      ("fact_gasto_mensual", "unique_8fk_grain",
-        dup(star.fact, MefSchema.factFks)),
+      ("fact_gasto_mensual", "unique_8fk_grain", dupGroups(star.fact, MefSchema.factFks)),
       ("fact_gasto_mensual", "fk_not_null",
-        star.fact.filter(MefSchema.factFks.map(col(_).isNull).reduce(_ || _)).count()))
+        star.fact.filter(MefSchema.factFks.map(col(_).isNull).reduce(_ || _))))
 
     val fkIntegrity = MefSchema.dims.map { spec =>
       ("fact_gasto_mensual", s"fk_${spec.id}_references_${spec.name}",
-        star.fact.select(col(spec.id))
-          .join(star.dims(spec.name).select(col(spec.id)), Seq(spec.id), "left_anti")
-          .count())
-    }
-
-    val tiempoIntegrity = Seq(
-      ("fact_gasto_mensual", "fk_tiempo_id_references_dim_tiempo",
-        star.fact.select(col("tiempo_id"))
-          .join(star.dimTiempo.select(col("tiempo_id")), Seq("tiempo_id"), "left_anti")
-          .count()))
+        dangling(spec.id, star.dims(spec.name)))
+    } :+ ("fact_gasto_mensual", "fk_tiempo_id_references_dim_tiempo",
+      dangling("tiempo_id", star.dimTiempo))
 
     val dimChecks = MefSchema.dims.flatMap { spec =>
       val d = star.dims(spec.name)
       Seq(
-        (spec.name, s"pk_${spec.id}_unique", dup(d, Seq(spec.id))),
-        (spec.name, "natural_key_unique", dup(d, spec.keys)))
+        (spec.name, s"pk_${spec.id}_unique", dupGroups(d, Seq(spec.id))),
+        (spec.name, "natural_key_unique", dupGroups(d, spec.keys)))
     }
 
-    (factChecks ++ fkIntegrity ++ tiempoIntegrity ++ dimChecks)
-      .toDF("table", "constraint", "violations")
+    val checks = (factChecks ++ fkIntegrity ++ dimChecks).zipWithIndex
+    val violations = checks
+      .map { case ((_, _, rows), i) => rows.select(lit(i).as("check")) }
+      .reduce(_ union _)
+      .groupBy("check").count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+
+    checks.map { case ((table, constraint, _), i) =>
+      (table, constraint, violations.getOrElse(i, 0L))
+    }.toDF("table", "constraint", "violations")
   }
 
   /** True iff every constraint holds. */

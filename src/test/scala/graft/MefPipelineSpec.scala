@@ -200,6 +200,85 @@ class MefPipelineSpec extends SparkSuite {
     assert(!Validate.holds(spark, dangling))
   }
 
+  /** The 24 constraints in Validate's order, each with `violations`
+    * (default 0).
+    */
+  private def expectedChecks(violations: (String, Long)*): Seq[(String, String, Long)] = {
+    val fact = "fact_gasto_mensual"
+    val dims = Seq(
+      "dim_nivel_gobierno" -> "nivel_gobierno_id", "dim_ejecutora" -> "ejecutora_id",
+      "dim_programatica" -> "programatica_id", "dim_funcional" -> "funcional_id",
+      "dim_meta" -> "meta_id", "dim_financiera" -> "financiera_id",
+      "dim_clasificador_gasto" -> "clasif_gasto_id")
+    val names =
+      Seq(fact -> "unique_8fk_grain", fact -> "fk_not_null") ++
+        dims.map { case (d, id) => fact -> s"fk_${id}_references_$d" } ++
+        Seq(fact -> "fk_tiempo_id_references_dim_tiempo") ++
+        dims.flatMap { case (d, id) => Seq(d -> s"pk_${id}_unique", d -> "natural_key_unique") }
+    val v = violations.toMap
+    names.map { case (t, c) => (t, c, v.getOrElse(s"$t.$c", 0L)) }
+  }
+
+  private def validateRows(s: Star.StarSchema): Seq[(String, String, Long)] =
+    Validate.validate(spark, s).collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+
+  test("§2.11: Validate's full 24-row output is exact on clean and corrupted stars") {
+    import org.apache.spark.sql.functions.{col, lit, min, when}
+    assert(validateRows(star) == expectedChecks())
+    // k duplicated grain rows: k duplicate groups
+    val k = 2
+    assert(validateRows(star.copy(fact = star.fact.unionAll(star.fact.limit(k)))) ==
+      expectedChecks("fact_gasto_mensual.unique_8fk_grain" -> k))
+    // every fact row dangling on ejecutora_id
+    assert(validateRows(star.copy(fact = star.fact.withColumn("ejecutora_id", lit(999999)))) ==
+      expectedChecks("fact_gasto_mensual.fk_ejecutora_id_references_dim_ejecutora" -> 3))
+    // one null FK counts under fk_not_null AND under that FK's anti-join
+    val first = star.fact.agg(min(col("tiempo_id"))).head.getInt(0)
+    val nullMeta = star.fact.withColumn("meta_id",
+      when(col("tiempo_id") === first, lit(null).cast("int")).otherwise(col("meta_id")))
+    assert(validateRows(star.copy(fact = nullMeta)) == expectedChecks(
+      "fact_gasto_mensual.fk_not_null" -> 1,
+      "fact_gasto_mensual.fk_meta_id_references_dim_meta" -> 1))
+    // one duplicated dim row breaks both of its dim's uniques
+    val ej = star.dims("dim_ejecutora")
+    val dupDim = star.copy(dims = star.dims.updated("dim_ejecutora", ej.unionAll(ej.limit(1))))
+    assert(validateRows(dupDim) == expectedChecks(
+      "dim_ejecutora.pk_ejecutora_id_unique" -> 1,
+      "dim_ejecutora.natural_key_unique" -> 1))
+  }
+
+  /** Names of the actions `body` runs on this session, in order. */
+  private def actionsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.TestListenerBus
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = names.add(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = names.add(funcName)
+    }
+    TestListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { body; TestListenerBus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    names.toArray(Array.empty[String]).toSeq
+  }
+
+  test("tripwire: Validate.validate runs exactly one action") {
+    val built = star // built outside the listener window
+    val validated = actionsOf(Validate.validate(spark, built))
+    assert(validated == Seq("collect"), s"Validate ran ${validated.size} actions: $validated")
+  }
+
+  test("tripwire: Star.build runs at most one count, not one per dim") {
+    val p = writeFixture("2024-Gasto-Mensual.csv", StandardCharsets.UTF_8)
+    val normalized = Normalize(MefPipeline.transform(spark, Seq(p.toString)))
+    var built: Star.StarSchema = null
+    val building = actionsOf { built = Star.build(spark, normalized) }
+    assert(building.count(_ == "count") <= 1, s"Star.build actions: $building")
+    built.release()
+  }
+
   test("§2.11: column docs ride StructField metadata through Normalize") {
     val p = writeFixture("2024-Gasto-Mensual.csv", StandardCharsets.UTF_8)
     val n = Normalize(Transform(CsvIngest(spark, p.toString)))

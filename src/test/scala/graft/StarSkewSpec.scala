@@ -112,4 +112,50 @@ class StarSkewSpec extends SparkSuite {
       assert(w == r && w.nonEmpty, s"dim ${d.name} diverged through DenseId")
     }
   }
+
+  test("buildDim's dedup equals a reference groupBy(keys).agg(min(struct(attrs)))") {
+    import spark.implicits._
+    val spec = graft.mef.MefSchema.dims.find(_.name == "dim_clasificador_gasto").get
+    val attrs = spec.allCols.filterNot(spec.keys.contains)
+    val nul: String = null
+    // tipo_transaccion, generica, generica_nombre: a null key; -0.0/0.0
+    // and NaN in the double key; two attribute tuples for one key; null
+    // attributes next to non-null ones
+    val frame = Seq[(java.lang.Double, String, String)](
+      (null, "1", "sin tipo"), (null, "1", "otro"),
+      (-0.0, "2", "cero negativo"), (0.0, "2", "cero"), (0.0, "2", nul),
+      (Double.NaN, "3", "nan b"), (Double.NaN, "3", "nan a"),
+      (5.0, "4", "z"), (5.0, "4", "a"), (5.0, "4", "a"),
+      (6.0, nul, nul), (6.0, nul, "x"))
+      .toDF("tipo_transaccion", "generica", "generica_nombre")
+      .select(spec.allCols.map {
+        case c @ ("tipo_transaccion" | "generica" | "generica_nombre") => col(c)
+        case c if c.endsWith("_nombre") => when(col("generica") === "4", lit(c)).as(c)
+        case c => lit("k").as(c)
+      }: _*)
+    val reference = frame.groupBy(spec.keys.map(col): _*)
+      .agg(min(struct(attrs.map(col): _*)).as("_a"))
+      .select(spec.keys.map(col) ++ attrs.map(a => col(s"_a.$a").as(a)): _*)
+    // String.valueOf keeps -0.0 apart from 0.0 (Row == would not)
+    def render(df: org.apache.spark.sql.DataFrame) =
+      df.select(spec.allCols.map(col): _*).collect()
+        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    val want = render(reference)
+    assert(want.size == 5, s"fixture keys: $want")
+    Seq(Star.DimWindowMaxRows, 0L).foreach { bound =>
+      val dim = Star.buildDim(frame, spec, windowMaxRows = bound)
+      assert(render(dim) == want, s"buildDim (windowMaxRows=$bound) diverged from the reference")
+      assert(dim.select(spec.id).as[Int].collect().sorted.toSeq == (1 to 5))
+    }
+    // and Star.build's probe-free bounded route builds the same dims as buildDim
+    val normalized = Normalize(Transform(
+      graft.queries.MefStarQueries.syntheticRaw(spark, dir)))
+    val st = Star.build(spark, normalized)
+    graft.mef.MefSchema.dims.foreach { d =>
+      val b = st.dims(d.name).collect().toSeq.sortBy(_.getInt(0))
+      val w = Star.buildDim(normalized, d).collect().toSeq.sortBy(_.getInt(0))
+      assert(b == w && b.nonEmpty, s"dim ${d.name}: Star.build diverged from buildDim")
+    }
+    st.release()
+  }
 }
