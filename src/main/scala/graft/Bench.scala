@@ -13,6 +13,9 @@ import scala.collection.immutable.ListMap
   * `runMain graft.Bench mef_star` times only the star-pipeline
   * queries).
   *
+  * Both lines carry `codegen_classes`: the classes compiled during the
+  * timed queries ([[Sessions.codegenClasses]]).
+  *
   * A query that throws is reported in an "errors" list (and its name
   * keyed to -1 in "queries") instead of silently contributing elapsed
   * time to the total.
@@ -61,6 +64,7 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => nameFilter.forall(name.contains) }
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
+    val classes0 = Sessions.codegenClasses
     val results = selected.map { case (name, fn) =>
       val (elapsed, ok) = Sessions.timed {
         try { fn(spark, sfDir).count(); true }
@@ -72,10 +76,12 @@ object Bench {
       }
       name -> (if (ok) elapsed else -1.0)
     }
+    val codegenClasses = Sessions.codegenClasses - classes0
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     def line(fields: (String, Any)*) = Sessions.json(ListMap(
       Seq("metric" -> "total", "value" -> total, "unit" -> "sec") ++ fields ++
-        Seq("errors" -> errors, "sf" -> sfDir, "cpus" -> Sessions.cpus): _*))
+        Seq("errors" -> errors, "sf" -> sfDir, "cpus" -> Sessions.cpus,
+          "codegen_classes" -> codegenClasses): _*))
     val full = line("queries" -> ListMap(results: _*))
     println(full)
     // Also persist the full metric line: the driver's BENCH_r*.json

@@ -20,9 +20,13 @@ import scala.collection.immutable.ListMap
   * local box was hiding (a 1-partition stage, a driver loop) — a found
   * bug.
   *
-  * Prints `[iso] <query> run<i> <sec> s` per timed run, then one line
+  * Prints `[iso] <query> run<i> <sec> s codegen_classes=<n>` per timed
+  * run, then one line
   *   {"metric":"core_bench","cpus":N,"sf":dir,"runs":3,
-  *    "queries":{name:medianSec,…}}
+  *    "queries":{name:medianSec,…},"codegen_classes":{name:n,…}}
+  * where `codegen_classes` counts the classes compiled during the timed
+  * runs ([[Sessions.codegenClasses]]): close to 0 once the warm run has
+  * filled the codegen cache, so a thrashing cache shows at once.
   */
 object IsoBench {
 
@@ -63,19 +67,23 @@ object IsoBench {
     }
     val sfDir = Sessions.sfDir
     val spark = Sessions.fromEnv()
-    val medians = names.map { name =>
+    val timings = names.map { name =>
       def run(): Unit = SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       Sessions.timed(run()) // warm
-      val secs = (1 to 3).map { i =>
+      val runs = (1 to 3).map { i =>
+        val c0 = Sessions.codegenClasses
         val (sec, _) = Sessions.timed(run())
-        println(f"[iso] $name run$i $sec%.2f s")
-        sec
+        val classes = Sessions.codegenClasses - c0
+        println(f"[iso] $name run$i $sec%.2f s codegen_classes=$classes")
+        (sec, classes)
       }
-      name -> secs.sorted.apply(1)
+      (name, runs.map(_._1).sorted.apply(1), runs.map(_._2).sum)
     }
     println(Sessions.json(ListMap("metric" -> "core_bench", "cpus" -> Sessions.cpus,
-      "sf" -> sfDir, "runs" -> 3, "queries" -> ListMap(medians: _*))))
+      "sf" -> sfDir, "runs" -> 3,
+      "queries" -> ListMap(timings.map(t => t._1 -> t._2): _*),
+      "codegen_classes" -> ListMap(timings.map(t => t._1 -> t._3): _*))))
     spark.stop()
   }
 }

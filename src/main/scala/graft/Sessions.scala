@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Shared local-mode session factory: one place for the configs every
@@ -13,11 +14,29 @@ import org.apache.spark.sql.SparkSession
   *   TIMESTAMP(NANOS) which Spark 4 otherwise refuses to read;
   *   [[Tables.events]] converts the long back to a microsecond
   *   timestamp.
+  * - codegen cache of [[CodegenCacheEntries]] classes, not Spark's 100.
+  *   Measured on a 4-core host (perfbench inputs): one monthly op
+  *   (ingest, `Star.append`, A4 refresh) compiled 274-322 classes and a
+  *   cold full load 308, 124 of them in `Validate`, so the default
+  *   cache evicted every class before the next op asked for it again.
+  *   At 2000, a month replayed on an unchanged star compiles 6-12
+  *   classes instead of 318; a month on a grown star still compiles
+  *   125-137, because each append adds a union child to the dims and so
+  *   makes new plans. 2000 holds a cold load plus a year of such months;
+  *   after four appends metaspace grew 1.6 MB. [[codegenClasses]] shows
+  *   a thrashing cache.
   *
   * The measuring mains (Bench, IsoBench, PlanDump, ScaleBench, Verify)
   * also take their environment, timer and JSON output from here.
   */
 object Sessions {
+
+  /** `spark.sql.codegen.cache.maxEntries`: a static conf, read once per
+    * JVM when the first query compiles, so it must be set here, before
+    * any session exists. Sized above.
+    */
+  val CodegenCacheEntries = 2000
+
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -27,6 +46,7 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -41,6 +61,12 @@ object Sessions {
 
   /** The measuring mains' session: [[local]] at [[cpus]] threads. */
   def fromEnv(): SparkSession = local(cpus.toString)
+
+  /** Classes Janino has compiled in this JVM so far; the difference
+    * across an interval is the classes compiled in it (a cache hit
+    * compiles nothing). Warm timed runs should show close to 0.
+    */
+  def codegenClasses: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Wall seconds of `body`, then a `System.gc()` OUTSIDE the timed
     * interval. Local mode runs driver and executors in one JVM, and
