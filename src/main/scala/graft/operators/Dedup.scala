@@ -96,6 +96,7 @@ object Dedup {
     * (id_a, id_b, n_a, n_b, shared, jaccard) — callers that band or
     * re-threshold pairs (threshold curves) need the exact integers,
     * not just the one-division jaccard.
+    * `threshold` is only the final filter, never candidate pruning.
     */
   def ngramJaccardPairStats(
       df: DataFrame, idCol: String, textCol: String,

@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * event stream beyond its one partition-by-user exchange; AQE coalesces
   * the rest). Per-user state is two timestamps, never a buffered event
   * list, so a power user with millions of events costs the same as
-  * anyone else. The streaming analog (mapGroupsWithState keeping the
-  * same two timestamps) is in graft.streaming.
+  * anyone else.
   */
 object Funnel {
 

@@ -5359,8 +5359,7 @@ object PipelineQueries {
         |ORDER BY 1, 2""".stripMargin),
 
     // ------------------------------------------------------------------
-    // Streaming-shaped batch: tumbling 1h windows over events
-    // (Structured Streaming twin in graft.streaming.EventsStreaming).
+    // Streaming-shaped batch: tumbling 1h windows over events.
     "events_hourly_window" -> QueryDef(
       (s, dir) =>
         Tables.events(s, dir)
@@ -6023,9 +6022,8 @@ object PipelineQueries {
         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // ------------------------------------------------------------------
-    // Native session_window (batch): the SAME built-in operator the
-    // streaming path uses (EventsStreaming.sessionWindows), here under
-    // the oracle gate — DuckDB restates it as gap islands. Boundary
+    // Native session_window (batch): the built-in session operator, here
+    // under the oracle gate — DuckDB restates it as gap islands. Boundary
     // semantics differ from the lag-formulation: session_window spans
     // [first, last+gap) so an event exactly gap after its predecessor
     // starts a NEW session — the islands twin breaks on diff >= gap,

@@ -401,7 +401,7 @@ object TrainingMixQueries {
          |ORDER BY d.doc_id, e.epoch_idx""".stripMargin),
 
     // ------------------------------------------------------------------
-    // Sharded packing layout — streaming.StreamingPacker's batch twin:
+    // Sharded packing layout:
     // per-SHARD concat-and-chunk positions. Unlike the global cumsum
     // (sequence_packing, which needs the distributed PrefixSum), a
     // PARTITIONED cumsum is a plain window — every shard is its own

@@ -28,8 +28,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 object CsvIngest {
 
   /** utf-8-sig collapses into UTF-8 here: Hadoop's line reader, and so
-    * the probe, skips a BOM at the file's start, and [[apply]] strips
-    * one that still survives into the first header.
+    * the probe, skips a BOM at the file's start.
     */
   val encodings: Seq[String] = Seq("UTF-8", "ISO-8859-1")
 
@@ -45,7 +44,7 @@ object CsvIngest {
     val (chosen, header) = probe(spark, path)
     // force all-string schema (pandas dtype=str)
     val schema = StructType(header.map(c => StructField(c, StringType, nullable = true)))
-    val df = spark.read
+    spark.read
       .option("header", "true")
       .option("sep", ",")
       .option("quote", "\"")
@@ -54,11 +53,6 @@ object CsvIngest {
       .option("mode", "DROPMALFORMED")
       .schema(schema)
       .csv(path)
-    // utf-8-sig: strip a leading BOM that survives into the first header
-    val cols = df.columns
-    if (cols.nonEmpty && cols.head.startsWith("﻿"))
-      df.withColumnRenamed(cols.head, cols.head.stripPrefix("﻿"))
-    else df
   }
 
   /** The encoding [[apply]] reads `path` with, and the column names

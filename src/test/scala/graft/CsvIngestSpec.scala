@@ -73,6 +73,7 @@ class CsvIngestSpec extends SparkSuite {
     val text = lines("AÑO_EJE,DEPARTAMENTO", "2024,Junín")
     val path = write("\uFEFF".getBytes(UTF_8) ++ text.getBytes(ISO_8859_1))
     assert(probeMatchesSpark(path) == ("ISO-8859-1" -> Seq("AÑO_EJE", "DEPARTAMENTO")))
+    assert(CsvIngest(spark, path).columns.toSeq == Seq("AÑO_EJE", "DEPARTAMENTO"))
   }
 
   test("latin-1 accents only in the values still fall back to latin-1") {

@@ -36,24 +36,6 @@ class IncrementalDedupSpec extends SparkSuite {
     assert(out == 0, "case/whitespace-variant copies must be recognized")
   }
 
-  test("VectorMean aggregator: per-label centroids, partition-invariant") {
-    import org.apache.spark.sql.functions.udaf
-    val vm = udaf(new graft.functions.VectorMean(64))
-    val emb = Tables.embeddings(spark, dir)
-    def centroids(parts: Int) =
-      emb.repartition(parts)
-        .groupBy($"label").agg(vm($"embedding").as("centroid"))
-        .collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-    val c4 = centroids(4)
-    val c17 = centroids(17)
-    assert(c4.keySet == c17.keySet && c4.keySet.nonEmpty)
-    c4.foreach { case (k, v) =>
-      v.zip(c17(k)).foreach { case (a, b) => assert(math.abs(a - b) < 1e-9) }
-      assert(v.length == 64)
-    }
-  }
-
   test("profiler: one-pass long-format stats") {
     val p = Profiler.profile(Tables.nation(spark, dir)).collect()
     assert(p.length == 3)

@@ -1,14 +1,10 @@
 package graft
 
 import java.nio.file.Files
-import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.sources.Compactor
-import graft.streaming.EventsStreaming
-import graft.streaming.EventsStreaming.Event
 
 class SinkOpsSpec extends SparkSuite {
   import spark.implicits._
@@ -26,33 +22,6 @@ class SinkOpsSpec extends SparkSuite {
     val total = src.agg(sum("o_totalprice")).head.getDouble(0)
     assert(o.agg(sum("o_totalprice")).head.getDouble(0) == total)
     assert(j.agg(sum("o_totalprice")).head.getDouble(0) == total)
-  }
-
-  test("JSONL ingest: one-scan good/quarantine split, gz shards, no silent drops") {
-    import java.nio.charset.StandardCharsets
-    import org.apache.spark.sql.types.{LongType, StringType, StructType}
-    val dir = Files.createTempDirectory("jsonl")
-    val lines = Seq(
-      """{"doc_id": 1, "text": "hello world", "lang": "en"}""",
-      """{"doc_id": 2, "text": "hola mundo", "lang": "es"}""",
-      """not json at all""",
-      """{"doc_id": "NaN-ish", "text": 42}""", // type mismatch → corrupt
-      """{"doc_id": 5, "text": "ok", "lang": null}""")
-    Files.write(dir.resolve("part0.jsonl"), lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    // a gz shard alongside (gzip not splittable — parallelism is per file)
-    val gz = new java.util.zip.GZIPOutputStream(
-      Files.newOutputStream(dir.resolve("part1.jsonl.gz")))
-    gz.write("""{"doc_id": 6, "text": "gz shard", "lang": "en"}""".getBytes(StandardCharsets.UTF_8))
-    gz.close()
-    val schema = StructType(new StructType()
-      .add("doc_id", LongType).add("text", StringType).add("lang", StringType))
-    val split = graft.sources.JsonlIngest(spark, dir.toString, schema)
-    val good = split.good.collect().map(_.getLong(0)).sorted.toSeq
-    assert(good == Seq(1L, 2L, 5L, 6L), s"good rows: $good")
-    val bad = split.quarantine.select("raw_line").collect().map(_.getString(0)).toSet
-    assert(bad.exists(_.contains("not json")), "malformed line quarantined with raw text")
-    assert(bad.exists(_.contains("NaN-ish")), "type-mismatch line quarantined")
-    assert(split.good.count() + split.quarantine.count() == 6, "no silent drops")
   }
 
   test("schema evolution: mergeSchema unions schemas across writes (ALTER TABLE analog, §2.11)") {
@@ -120,39 +89,5 @@ class SinkOpsSpec extends SparkSuite {
     assert(spark.read.parquet(out).inputFiles.length == planned)
     assert(planned > 1)
     assert(spark.read.parquet(out).count() == 50000)
-  }
-
-  test("stream-static enrich: broadcast dim attributes land on streamed rows") {
-    implicit val sqlCtx = spark.sqlContext
-    def ev(id: Long, user: Long) =
-      Event(id, Timestamp.valueOf("2024-01-01 00:00:00"), user, "purchase", 1.0)
-    val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "tier")
-    val mem = MemoryStream[Event]
-    val q = EventsStreaming.enrichStream(mem.toDF(), dim, "user_id")
-      .writeStream.format("memory").queryName("enrich_out").outputMode("append").start()
-    mem.addData(ev(10, 1), ev(11, 2), ev(12, 3)) // user 3 not in dim -> null tier
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("enrich_out")
-      .select("event_id", "tier").collect()
-      .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-    assert(got == Map(10L -> Some("gold"), 11L -> Some("basic"), 12L -> None))
-  }
-
-  test("idempotent streaming append: re-delivered keys never double rows") {
-    implicit val sqlCtx = spark.sqlContext
-    val out = Files.createTempDirectory("idem_sink").toString + "/events"
-    def ev(id: Long, v: Double) =
-      Event(id, Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "purchase", v)
-    val mem = MemoryStream[Event]
-    val q = EventsStreaming.idempotentAppend(mem.toDF(), out, "event_id")
-    mem.addData(ev(1, 1.0), ev(2, 2.0), ev(2, 2.0)) // in-batch dup
-    q.processAllAvailable()
-    mem.addData(ev(2, 2.0), ev(3, 3.0)) // cross-batch re-delivery
-    q.processAllAvailable()
-    mem.addData(ev(1, 1.0), ev(2, 2.0)) // full batch of dups -> no-op
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.read.parquet(out).select("event_id").as[Long].collect().sorted
-    assert(got.toSeq == Seq(1L, 2L, 3L))
   }
 }
