@@ -1,6 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-audit utility: dumps formatted physical plans of flagship
   * queries to PLANS.md — the evidence trail for the scale claims in
@@ -325,160 +334,64 @@ object Explain {
     "isotonic_calibration" ->
       "PAVA via the max-min closed form: the corpus pass is one bucket aggregate; the ≤55-interval products are bounded broadcast joins over the checkpointed 10-row bucket frame — no sequential pooling loop, no growing state.")
 
-  /** Iterative/greedy flagships whose loops checkpoint per round (so
-    * the final frame's plan is lineage-truncated): each entry builds
-    * ONE representative round's frame — via the operator's own
-    * factored-out round body where one exists — on checkpointed
-    * round-(r−1) state, exactly the physical plan the loop executes
-    * every round. The note carries the loop invariant.
+  /** Iterative/greedy flagships whose loops checkpoint per round, so
+    * the final frame's plan is lineage-truncated: each section shows
+    * the plans the query's actions executed ([[capturePlans]]). The
+    * note carries the loop invariant.
     */
-  private def iterAudited(dir: String): Seq[(String, String,
-      org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)] = {
-    import org.apache.spark.sql.functions._
-    Seq(
-      ("bfs_hops_from_seeds — round 2 (GraphOps.bfsRound)",
-        "The loop body itself (GraphOps.bfsRound, called by bfsHops): frontier-expansion equi-join on the checkpointed edge frame + distinct + anti-join against the checkpointed visited set. Loop invariant: per-round work is proportional to the FRONTIER (the join probe side), not the visited set; frontier and visited are localCheckpoint'ed each round because both feed two consumers (measured 2× iso win, CLAUDE.md).",
-        s => {
-          val e = queries.GraphLearnQueries.edgesFrame(s, dir)
-            .select(col("u"), col("v")).localCheckpoint()
-          val seeds = s.range(1, 4).select((col("id") * 2).as("node"))
-          val visited = operators.GraphOps.bfsHops(e, seeds, rounds = 1)
-          val frontier = visited.filter(col("hop") === 1)
-            .select(col("node").as("fnode"))
-          operators.GraphOps.bfsRound(e, visited, frontier, 2)
-        }),
-      ("mst_trade_backbone — Borůvka round 1 pick (Mst.pickRound)",
-        "The loop body itself (Mst.pickRound, called by boruvka): two label equi-joins onto the once-checkpointed edge frame, symmetrized per-component frame, struct-min aggregate under the (w,u,v) total order, 2-cycle-collapsing distinct. Loop invariant: the component graph at least halves per round (O(log V) rounds); labels re-checkpoint per round; the 4-way graph build runs ONCE before the loop.",
-        s => {
-          val e = queries.GraphLearnQueries.mstTradeEdges(s, dir)
-            .select(col("u").cast("long").as("u"),
-              col("v").cast("long").as("v"), col("w").cast("long").as("w"))
-            .localCheckpoint()
-          val labels = e.select(col("u").as("n"))
-            .unionByName(e.select(col("v").as("n"))).distinct()
-            .select(col("n"), col("n").as("lab")).localCheckpoint()
-          operators.Mst.pickRound(e, labels)
-        }),
-      ("kcenter_coreset — round 2 min-distance update",
-        "One greedy round (SelectionEmbedQueries.kcenterDistTo + running-min, the query's exact loop body): distances to the new center are a broadcast 1-row cross join with the codegen'd VecDot over the checkpointed quantized points; the running-min is one vec_id equi-join. Loop invariant: the min-distance frame re-checkpoints per round (linear lineage otherwise); the driver sees exactly the 1-row argmax per round (TakeOrderedAndProject, k=1).",
-        s => {
-          val pts = queries.SelectionEmbedQueries.kcenterPts(s, dir)
-          val firstId = pts.agg(min(col("vec_id"))).collect()(0).getLong(0)
-          val m = queries.SelectionEmbedQueries
-            .kcenterDistTo(pts, pts.filter(col("vec_id") === firstId))
-            .localCheckpoint()
-          val cid = m.orderBy(col("dist").desc, col("vec_id")).limit(1)
-            .collect()(0).getLong(0)
-          val d = queries.SelectionEmbedQueries
-            .kcenterDistTo(pts, pts.filter(col("vec_id") === cid))
-          m.join(d.withColumnRenamed("dist", "d2"), Seq("vec_id"))
-            .select(col("vec_id"),
-              when(col("d2") < col("dist"), col("d2")).otherwise(col("dist"))
-                .as("dist"))
-        }),
-      ("lpa_communities — round 2, even half-step (GraphOps.lpaCommunities phase)",
-        "One semi-synchronous LPA half-step on checkpointed round-1 labels: edge⋈label equi-join + (node, label) count agg + struct-max argmax + left-join label update — all keyed on the node id. Loop invariant: labels checkpoint per phase (they feed the next phase's count join, the update base, and the round-end convergence probe); the probe is a limit-1 count per round and non-convergence throws.",
-        s => {
-          val e = queries.GraphLearnQueries.edgesFrame(s, dir)
-            .localCheckpoint()
-          val lab = e.select(col("u").as("n")).distinct()
-            .select(col("n"), col("n").as("lab")).localCheckpoint()
-          operators.GraphOps.lpaPhase(e, lab, par = 0)
-        }),
-      ("submodular_source_select — round 2 gains",
-        "One greedy round over the once-checkpointed (source, bigram) universe: marginal gains are a single anti-join against the checkpointed covered set + one source-grain count agg; the argmax the driver collects is 1 row (TakeOrderedAndProject, k=1). Loop invariant: rounds are bounded (k≤5) and the covered set re-checkpoints per round so round r+1 never re-derives rounds 1..r; the loop breaks when the argmax frame is empty (universe exhausted).",
-        s => {
-          import s.implicits._
-          val bg = queries.TrainingMixQueries.submodularBigrams(s, dir)
-          val gains1 = bg
-            .join(s.emptyDataset[String].toDF("term"), Seq("term"), "left_anti")
-            .groupBy(col("source")).agg(count(lit(1)).as("gain"))
-          val top = gains1.orderBy(col("gain").desc, col("source")).limit(1)
-            .collect()(0)
-          val covered = bg.filter(col("source") === top.getString(0))
-            .select(col("term")).distinct().localCheckpoint()
-          bg.join(covered, Seq("term"), "left_anti")
-            .groupBy(col("source")).agg(count(lit(1)).as("gain"))
-        }),
-      ("ppr_supplier_seeds — round 1 (PageRank.runPersonalized body)",
-        "One personalized-PageRank round on the checkpointed (edge,deg) frame and the checkpointed seed-folded universe: ranks BROADCAST into the edge join (A/B'd — the O(nodes) rank frame never shuffles the O(edges) frame), one v-keyed agg for the damped mass, then the restart fold is a broadcast left-join onto the universe — the seed frame is joined ONCE before the loop (the re-join-seeds-per-round form measured 8.8 s vs 4.4-5.3 folded, CLAUDE.md). Loop invariant: k=5 rounds nest in one action, deliberately NO per-round checkpoint (A/B'd: AQE reuses the exchanges; checkpointing measured slower).",
-        s => {
-          val e0 = Tables.lineitem(s, dir)
-            .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-            .select((col("l_suppkey") * 2).as("u"), (col("o_custkey") * 2 + 1).as("v"))
-            .distinct()
-          val edges = e0.unionByName(e0.select(col("v").as("u"), col("u").as("v"))).distinct()
-          val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-          val ed = edges.join(deg, Seq("u")).localCheckpoint()
-          val seed = s.range(1, 4).select((col("id") * 2).as("node")).distinct()
-            .withColumn("is_seed", lit(1))
-          val uni = deg.select(col("u").as("node"))
-            .join(broadcast(seed), Seq("node"), "left")
-            .select(col("node"),
-              when(col("is_seed").isNotNull, 150000L).otherwise(0L).as("restart"))
-            .localCheckpoint()
-          val ranks = uni.select(col("node"),
-            when(col("restart") > 0, 1000000L).otherwise(0L).as("rank"))
-          val damped = ed.join(broadcast(ranks), ed("u") === ranks("node"))
-            .select(col("v"), org.apache.spark.sql.functions.expr("rank div deg").as("contrib"))
-            .groupBy(col("v"))
-            .agg(org.apache.spark.sql.functions
-              .expr("CAST((85 * sum(contrib)) div 100 AS BIGINT)").as("damped"))
-            .select(col("v").as("node"), col("damped"))
-          uni.join(broadcast(damped), Seq("node"), "left")
-            .select(col("node"),
-              (coalesce(col("damped"), lit(0L)) + col("restart")).as("rank"))
-        }),
-      ("semdedup_knn_clusters — mutual-kNN sparsification + census (post-CC stage)",
-        "The kNN build is ONE ids-only equi-join on the IVF home-list id (each candidate pair arises once — no dedup stage) over the session-cached trained quantizer; shown here: the mutual-kNN reciprocation self-join on the checkpointed kNN edge frame, which feeds pointer-jump CC (O(log d) rounds, audited under er_resolved_entities' class). Loop invariant: CC labels checkpoint per round; the final census is one cluster-keyed agg + a left join for singleton clusters — nothing re-derives the routing.",
-        s => {
-          val knn = operators.KnnGraph.buildWithCentroids(
-            Tables.embeddings(s, dir), "vec_id", "embedding", k = 5,
-            queries.IvfArtifacts.centroids(s, dir), nprobe = 8)
-          operators.KnnGraph.mutualEdges(knn)
-        }),
-      ("luby_mis_trade — round 1 winners (GraphOps.lubyMis body)",
-        "One Luby round on the checkpointed symmetric edge frame: losers = edges whose ACTIVE neighbor beats them on the fresh per-round (md5, id) strict order — one equi-join on v + a map-side priority compare — and winners = active ∖ losers via one anti-join. Loop invariant: winners and the shrinking active set checkpoint per round (each feeds ≥2 consumers: the output union, the neighborhood-retire join, the convergence probe); fresh per-round priorities give O(log n) expected rounds and non-convergence throws.",
-        s => {
-          val b = Tables.lineitem(s, dir)
-            .join(Tables.orders(s, dir), col("o_orderkey") === col("l_orderkey"))
-            .select((col("l_suppkey") * 2).cast("long").as("u"),
-              (col("o_custkey") * 2 + 1).cast("long").as("v"))
-            .distinct()
-          val e = b.unionByName(b.select(col("v").as("u"), col("u").as("v")))
-            .localCheckpoint()
-          val active = e.select(col("u").as("n")).distinct().localCheckpoint()
-          def pri(id: org.apache.spark.sql.Column) =
-            md5(concat(lit("mis"), lit("1"), lit("_"), id.cast("string")))
-          val losers = e
-            .join(active.select(col("n").as("__av")), col("v") === col("__av"))
-            .filter(pri(col("v")) < pri(col("u")) ||
-              (pri(col("v")) === pri(col("u")) && col("v") < col("u")))
-            .select(col("u").as("n")).distinct()
-          active.join(losers, Seq("n"), "left_anti")
-        }),
-      ("greedy_matching_trade — round 1 winners (GraphOps.greedyMatching body)",
-        "One matching round on the checkpointed live-edge frame: per-node min priority key is ONE union + ONE agg (the linear formulation — the per-edge NOT-EXISTS neighbor scan is quadratic), winners are two equi-joins back on u and v. Loop invariant: the globally minimal live edge always wins, so every round makes progress; live re-derives from the shrinking active set per round and checkpoints (it feeds the probe, the agg, and the winner join).",
-        s => {
-          val live = Tables.lineitem(s, dir)
-            .join(Tables.orders(s, dir), col("o_orderkey") === col("l_orderkey"))
-            .select((col("l_suppkey") * 2).cast("long").as("u"),
-              (col("o_custkey") * 2 + 1).cast("long").as("v"))
-            .distinct()
-            .withColumn("pk", concat(
-              md5(concat(lit("match"), lit("1"), lit("_"),
-                col("u").cast("string"), lit("_"), col("v").cast("string"))),
-              lit(":"), col("u").cast("string"), lit(":"), col("v").cast("string")))
-            .localCheckpoint()
-          val nodeMin = live.select(col("u").as("n"), col("pk"))
-            .unionByName(live.select(col("v").as("n"), col("pk")))
-            .groupBy(col("n")).agg(min(col("pk")).as("mp"))
-          live
-            .join(nodeMin.select(col("n").as("u"), col("mp").as("__mu")), Seq("u"))
-            .join(nodeMin.select(col("n").as("v"), col("mp").as("__mv")), Seq("v"))
-            .filter(col("pk") === col("__mu") && col("pk") === col("__mv"))
-            .select(col("u"), col("v"))
-        }))
+  private val iterative = Seq(
+    "bfs_hops_from_seeds" ->
+      "The loop body (GraphOps.bfsHops): frontier-expansion equi-join on the checkpointed edge frame + distinct + anti-join against the checkpointed visited set. Loop invariant: per-round work is proportional to the FRONTIER (the join probe side), not the visited set; frontier and visited are localCheckpoint'ed each round because both feed two consumers (measured 2× iso win, CLAUDE.md).",
+    "mst_trade_backbone" ->
+      "The loop body (Mst.boruvka's pick round): two label equi-joins onto the once-checkpointed edge frame, symmetrized per-component frame, struct-min aggregate under the (w,u,v) total order, 2-cycle-collapsing distinct. Loop invariant: the component graph at least halves per round (O(log V) rounds); labels re-checkpoint per round; the 4-way graph build runs ONCE before the loop.",
+    "kcenter_coreset" ->
+      "One greedy round (distance to the new center + running-min): distances are a broadcast 1-row cross join with the codegen'd VecDot over the checkpointed quantized points; the running-min is one vec_id equi-join. Loop invariant: the min-distance frame re-checkpoints per round (linear lineage otherwise); each round collects the 1-row argmax (TakeOrderedAndProject, k=1).",
+    "lpa_communities" ->
+      "One semi-synchronous LPA half-step per checkpoint, run inside the lpaPartition artifact's build: edge⋈label equi-join + (node, label) count agg + struct-max argmax + left-join label update — all keyed on the node id. Loop invariant: labels checkpoint per phase (they feed the next phase's count join, the update base, and the round-end convergence probe); the probe is a limit-1 count per round and non-convergence throws.",
+    "submodular_source_select" ->
+      "One greedy round over the once-checkpointed (source, bigram) universe: marginal gains are a single anti-join against the checkpointed covered set + one source-grain count agg; the collected argmax is 1 row (TakeOrderedAndProject, k=1). Loop invariant: rounds are bounded (k≤5) and the covered set re-checkpoints per round so round r+1 never re-derives rounds 1..r; the loop breaks when the argmax frame is empty (universe exhausted).",
+    "ppr_supplier_seeds" ->
+      "Personalized PageRank over the preparedTradeEdges artifact's checkpointed (edge,deg) frame and the checkpointed seed-folded universe: ranks BROADCAST into the edge join (A/B'd — the O(nodes) rank frame never shuffles the O(edges) frame), one v-keyed agg for the damped mass, then the restart fold is a broadcast left-join onto the universe — the seed frame is joined ONCE before the loop (the re-join-seeds-per-round form measured 8.8 s vs 4.4-5.3 folded, CLAUDE.md). Loop invariant: k=5 rounds nest in the final plan, deliberately NO per-round checkpoint (A/B'd: AQE reuses the exchanges; checkpointing measured slower).",
+    "semdedup_knn_clusters" ->
+      "The kNN build is ONE ids-only equi-join on the IVF home-list id (each candidate pair arises once — no dedup stage) over the session-cached trained quantizer; the mutual-kNN reciprocation self-join on the checkpointed kNN edge frame feeds pointer-jump CC (O(log d) rounds). Loop invariant: CC labels checkpoint per round; the final census is one cluster-keyed agg + a left join for singleton clusters — nothing re-derives the routing.",
+    "luby_mis_trade" ->
+      "One Luby round on the checkpointed symmetric edge frame: losers = edges whose ACTIVE neighbor beats them on the fresh per-round (md5, id) strict order — one equi-join on v + a map-side priority compare — and winners = active ∖ losers via one anti-join. Loop invariant: winners and the shrinking active set checkpoint per round (each feeds ≥2 consumers: the output union, the neighborhood-retire join, the convergence probe); fresh per-round priorities give O(log n) expected rounds and non-convergence throws.",
+    "greedy_matching_trade" ->
+      "One matching round on the checkpointed live-edge frame: per-node min priority key is ONE union + ONE agg (the linear formulation — the per-edge NOT-EXISTS neighbor scan is quadratic), winners are two equi-joins back on u and v. Loop invariant: the globally minimal live edge always wins, so every round makes progress; live re-derives from the shrinking active set per round and checkpoints (it feeds the probe, the agg, and the winner join).")
+
+  /** One distinct executed plan shape: how many actions ran it, the
+    * first such action's name, and that action's formatted plan.
+    */
+  final case class PlanShape(runs: Int, action: String, plan: String)
+
+  /** Runs `body` in a fresh session of `spark`, noop-writes its frame,
+    * and returns every plan the session's actions executed, one
+    * [[PlanShape]] per shape in the order it first ran. A shape is the
+    * formatted plan with every digit run masked (expression and RDD
+    * ids, per-round literals), so a loop body shows up as one shape
+    * run once per round. A fresh session also rebuilds the session
+    * artifacts the body reads, so loops inside artifact builds run
+    * here too.
+    */
+  def capturePlans(spark: SparkSession)(body: SparkSession => DataFrame): Seq[PlanShape] = {
+    val s = spark.newSession()
+    val runs = new ConcurrentLinkedQueue[(String, QueryExecution)]()
+    s.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit = {
+        runs.add(action -> qe)
+        ()
+      }
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    body(s).write.format("noop").mode("overwrite").save()
+    ListenerBusDrain.drain(s.sparkContext)
+    val shapes = mutable.LinkedHashMap.empty[String, PlanShape]
+    runs.asScala.foreach { case (action, qe) =>
+      val plan = qe.explainString(FormattedMode)
+      val key = plan.replaceAll("[0-9]+", "#")
+      shapes(key) = shapes.get(key).fold(PlanShape(1, action, plan))(p => p.copy(runs = p.runs + 1))
+    }
+    shapes.values.toSeq
   }
 
   def main(args: Array[String]): Unit = {
@@ -491,19 +404,21 @@ object Explain {
     audited.foreach { case (name, note) =>
       sb.append(s"\n## $name\n\n$note\n\n```\n")
       sb.append(SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+        FormattedMode))
       sb.append("```\n")
     }
     // Iterative/greedy flagships: loops with per-round checkpoints
     // can't be EXPLAIN'd whole (the final frame is lineage-truncated),
-    // so each section shows ONE representative round's physical plan
-    // on checkpointed round-(r−1) state — the plan the loop executes
-    // every round — plus the loop-invariant note.
-    iterAudited(dir).foreach { case (title, note, build) =>
-      sb.append(s"\n## $title\n\n$note\n\n```\n")
-      sb.append(build(spark).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      sb.append("```\n")
+    // so each section shows what the query's own actions executed.
+    iterative.foreach { case (name, note) =>
+      val shapes = capturePlans(spark)(s => SparkEntry.queries(name)(s, dir))
+      sb.append(s"\n## $name (captured)\n\n$note\n\n")
+      sb.append(s"Plans the `SparkEntry` query `$name` executed in a fresh session, " +
+        s"one per distinct shape, in the order first run (${shapes.map(_.runs).sum} actions, " +
+        s"${shapes.size} shapes).\n")
+      shapes.zipWithIndex.foreach { case (p, i) =>
+        sb.append(s"\n### ${i + 1}. ran ${p.runs}× (first as `${p.action}`)\n\n```\n${p.plan}```\n")
+      }
     }
     // Not a SparkEntry query: the optimizer-rule rewrite demo. The
     // user-stated predicate is year(l_shipdate) = 1997 — the plan must
@@ -513,7 +428,7 @@ object Explain {
     sb.append("rewrites it to a half-open date range so PushedFilters sees it.\n\n```\n")
     sb.append(Tables.lineitem(spark, dir)
       .filter(org.apache.spark.sql.functions.expr("year(l_shipdate) = 1997"))
-      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+      .queryExecution.explainString(FormattedMode))
     sb.append("```\n")
     // Also not a SparkEntry query: the bucketed-table co-located join
     // (write-time layout, so it needs tables written first). The plan
@@ -537,7 +452,7 @@ object Explain {
       .join(sources.Bucketing.read(spark, "plans_bk_lineitem"),
         org.apache.spark.sql.functions.col("o_orderkey") ===
           org.apache.spark.sql.functions.col("l_orderkey"))
-      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+      .queryExecution.explainString(FormattedMode))
     sb.append("```\n")
     // Skew evidence for the star grain consolidation: one supplier key
     // remapped onto ~half of all rows. The plan's partial HashAggregate
@@ -557,7 +472,7 @@ object Explain {
             .otherwise(col("l_suppkey")))
         .groupBy(col("l_suppkey"), month(col("l_shipdate")).as("mes"))
         .agg(sum(col("l_quantity")).as("q"), count(lit(1)).as("n"))
-        .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+        .queryExecution.explainString(FormattedMode)
     }
     sb.append("```\n")
     // AQE skew-join evidence (EXECUTED plan — the split is a runtime
@@ -585,11 +500,11 @@ object Explain {
       // collect() (not count()) so THIS queryExecution finalizes —
       // the skew split is a runtime re-plan
       joined.collect()
-      joined.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      joined.queryExecution.explainString(FormattedMode)
     }
     sb.append("```\n")
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"[explain] wrote PLANS.md (${audited.size + iterAudited(dir).size + 4} plans)")
+    println(s"[explain] wrote PLANS.md (${audited.size + iterative.size + 4} sections)")
     spark.stop()
   }
 }

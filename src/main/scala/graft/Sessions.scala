@@ -76,11 +76,16 @@ object Sessions {
     * 38 s in a full sweep vs 6 s isolated).
     */
   def timed[T](body: => T): (Double, T) = {
+    val r = elapsed(body)
+    System.gc()
+    r
+  }
+
+  /** Wall seconds of `body`, with no GC after it. */
+  def elapsed[T](body: => T): (Double, T) = {
     val t0 = System.nanoTime()
     val r = body
-    val sec = (System.nanoTime() - t0) / 1e9
-    System.gc()
-    (sec, r)
+    ((System.nanoTime() - t0) / 1e9, r)
   }
 
   /** A JSON string literal: quote, backslash and EVERY control char

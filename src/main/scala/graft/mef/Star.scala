@@ -307,13 +307,4 @@ object Star {
     // (checkpointed frames free their blocks when the RDDs are GC'd.)
     StarSchema(star.dimTiempo, matDims, fact)
   }
-
-  /** P4 diagnostics: per-FK unresolved counts, one pass
-    * (`etl/cargar_postgres.py:370-371`).
-    */
-  def fkNullDiagnostics(factWithFks: DataFrame): DataFrame =
-    factWithFks.agg(
-      count(lit(1)).as("total_rows"),
-      MefSchema.factFks.map(fk =>
-        count(when(col(fk).isNull, 1)).as(s"null_$fk")): _*)
 }

@@ -110,11 +110,10 @@ object GraphOps {
   }
 
   /** ONE LPA half-step's updated label frame, pre-checkpoint — the
-    * loop body of [[lpaCommunities]], factored out so `graft.Explain`
-    * audits the exact per-phase physical plan (edge⋈label equi-join +
+    * loop body of [[lpaCommunities]] (edge⋈label equi-join +
     * (node,label) count + struct-max argmax + label-update join).
     */
-  private[graft] def lpaPhase(
+  private def lpaPhase(
       e: DataFrame, cur: DataFrame, par: Int): DataFrame = {
     val cnt = e.filter(col("u") % 2 === par)
       .join(cur.select(col("n").as("vn"), col("lab")),
@@ -155,11 +154,10 @@ object GraphOps {
   }
 
   /** ONE BFS round's frame, pre-checkpoint — the loop body of
-    * [[bfsHops]], factored out so `graft.Explain` audits the exact
-    * per-round physical plan the loop executes (frontier expansion
-    * equi-join + distinct + visited anti-join).
+    * [[bfsHops]] (frontier expansion equi-join + distinct + visited
+    * anti-join).
     */
-  private[graft] def bfsRound(
+  private def bfsRound(
       e: DataFrame, visited: DataFrame, frontier: DataFrame,
       r: Int): DataFrame =
     e.join(frontier, col("u") === col("fnode"))
@@ -262,9 +260,11 @@ object GraphOps {
     // assumeCanonical: caller warrants edges are already distinct with
     // u ≠ v (the shared trade-graph artifact is, by node parity) — the
     // defensive re-distinct + re-checkpoint of an already-checkpointed
-    // frame is then a wasted full shuffle + materialization (r15).
+    // frame is then a wasted full shuffle + materialization (r15). That
+    // the frame is checkpointed is checked, not warranted.
     val e =
-      if (assumeCanonical) edges.select(col("u"), col("v"))
+      if (assumeCanonical)
+        Materialized.require(edges, "lubyMis edges").select(col("u"), col("v"))
       else edges.select(col("u"), col("v"))
         .filter(col("u") =!= col("v")).distinct().localCheckpoint()
     var active = e.select(col("u").as("n")).distinct().localCheckpoint()
@@ -321,7 +321,8 @@ object GraphOps {
     // re-checkpoint when the caller passes an already-canonical
     // (distinct, u ≠ v) checkpointed frame.
     val e0 =
-      if (assumeCanonical) edges.select(col("u"), col("v"))
+      if (assumeCanonical)
+        Materialized.require(edges, "greedyMatching edges").select(col("u"), col("v"))
       else edges.select(col("u"), col("v"))
         .filter(col("u") =!= col("v")).distinct().localCheckpoint()
     var act = e0.select(col("u").as("n"))

@@ -75,11 +75,10 @@ object Mst {
   }
 
   /** ONE Borůvka round's pick frame, pre-checkpoint — the loop body of
-    * [[boruvka]], factored out so `graft.Explain` audits the exact
-    * per-round physical plan (two label equi-joins, symmetrized comp
-    * frame, struct-min per component, 2-cycle-collapsing distinct).
+    * [[boruvka]] (two label equi-joins, symmetrized comp frame,
+    * struct-min per component, 2-cycle-collapsing distinct).
     */
-  private[graft] def pickRound(e: DataFrame, labels: DataFrame): DataFrame = {
+  private def pickRound(e: DataFrame, labels: DataFrame): DataFrame = {
     val x = e
       .join(labels.select(col("n").as("u"), col("lab").as("cu")), Seq("u"))
       .join(labels.select(col("n").as("v"), col("lab").as("cv")), Seq("v"))

@@ -21,10 +21,8 @@ import org.apache.spark.sql.functions._
   * rank frames are O(nodes) and stay UNmaterialized — at 5 rounds the
   * nested plan analyzes fine and per-round localCheckpoints measured
   * strictly slower (the lineage-truncation lesson applies to DEEP
-  * chains, not k=5). Ranks broadcast by default (see `run`); with
-  * broadcastRanks=false you'd co-partition edges and ranks on u so
-  * rounds reuse one partitioning. Symmetric edges mean no
-  * dangling-mass correction is needed.
+  * chains, not k=5). Ranks always broadcast (see `run`). Symmetric
+  * edges mean no dangling-mass correction is needed.
   */
 object PageRank {
 
@@ -32,19 +30,16 @@ object PageRank {
     * `edges(u, v)` (must already be distinct; both directions
     * present). Returns (node LONG, rank LONG).
     *
-    * `broadcastRanks` = true (default) ships the O(nodes) rank frame
-    * to the edge partitions each round — right whenever nodes ≪ edges
-    * (every bipartite fact graph; measured 6.2 → 5.2 s iso at sf0.1
-    * vs letting the planner choose, and per-round localCheckpoints
-    * were strictly slower at this depth — 5 rounds nest fine in one
-    * action). For web-scale graphs where ranks outgrow broadcast,
-    * pass false: the rounds become co-partitioned shuffle joins and
-    * the right cluster move is pre-partitioning edges and ranks on u.
+    * Each round ships the O(nodes) rank frame to the edge partitions
+    * as a broadcast — right whenever nodes ≪ edges (every bipartite
+    * fact graph; measured 6.2 → 5.2 s iso at sf0.1 vs letting the
+    * planner choose, and per-round localCheckpoints were strictly
+    * slower at this depth — 5 rounds nest fine in one action).
     */
-  def run(edges: DataFrame, rounds: Int, broadcastRanks: Boolean = true): DataFrame = {
+  def run(edges: DataFrame, rounds: Int): DataFrame = {
     val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
     val ed = edges.join(deg, Seq("u")).localCheckpoint()
-    runPrepared(deg, ed, rounds, broadcastRanks)
+    runPrepared(deg, ed, rounds)
   }
 
   /** The degree frame + degree-joined edge frame [[run]] and
@@ -62,14 +57,12 @@ object PageRank {
   }
 
   /** [[run]]'s round loop over a prepared (deg, ed) pair. */
-  def runPrepared(deg: DataFrame, ed: DataFrame, rounds: Int,
-      broadcastRanks: Boolean = true): DataFrame = {
+  def runPrepared(deg: DataFrame, ed: DataFrame, rounds: Int): DataFrame = {
     var ranks = deg.select(col("u").as("node"), lit(1000000L).as("rank"))
       .localCheckpoint()
     (0 until rounds).foreach { _ =>
-      val r = if (broadcastRanks) broadcast(ranks) else ranks
       ranks = ed
-        .join(r, ed("u") === ranks("node"))
+        .join(broadcast(ranks), ed("u") === ranks("node"))
         .select(col("v"), expr("rank div deg").as("contrib"))
         .groupBy(col("v"))
         .agg(expr("CAST(150000 + (85 * sum(contrib)) div 100 AS BIGINT)").as("rank"))
@@ -85,19 +78,17 @@ object PageRank {
     * scaled-integer rounds as [[run]] (r′ = 150000 + (85·Σ contrib)
     * div 100, r₀ = 1e6) so the oracle replays bit-for-bit. Weights
     * and strengths are BIGINT co-occurrence counts; rank·w stays far
-    * under 2^63 at any corpus scale that fits a count. Same
-    * broadcast-ranks policy and caveats as [[run]].
+    * under 2^63 at any corpus scale that fits a count. Ranks
+    * broadcast, as in [[run]].
     */
-  def runWeighted(
-      edges: DataFrame, rounds: Int, broadcastRanks: Boolean = true): DataFrame = {
+  def runWeighted(edges: DataFrame, rounds: Int): DataFrame = {
     val st = edges.groupBy(col("u")).agg(sum(col("w")).as("s"))
     val ed = edges.join(st, Seq("u")).localCheckpoint()
     var ranks = st.select(col("u").as("node"), lit(1000000L).as("rank"))
       .localCheckpoint()
     (0 until rounds).foreach { _ =>
-      val r = if (broadcastRanks) broadcast(ranks) else ranks
       ranks = ed
-        .join(r, ed("u") === ranks("node"))
+        .join(broadcast(ranks), ed("u") === ranks("node"))
         .select(col("v"), expr("(rank * w) div s").as("contrib"))
         .groupBy(col("v"))
         .agg(expr("CAST(150000 + (85 * sum(contrib)) div 100 AS BIGINT)").as("rank"))
@@ -116,18 +107,15 @@ object PageRank {
     * from the node universe (left joins keep zero-rank nodes alive so
     * a node reachable in round k exists in round k−1's frame).
     */
-  def runPersonalized(
-      edges: DataFrame, seeds: DataFrame, rounds: Int,
-      broadcastRanks: Boolean = true): DataFrame = {
+  def runPersonalized(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
     val ed = edges.join(deg, Seq("u")).localCheckpoint()
-    runPersonalizedPrepared(deg, ed, seeds, rounds, broadcastRanks)
+    runPersonalizedPrepared(deg, ed, seeds, rounds)
   }
 
   /** [[runPersonalized]]'s body over a prepared (deg, ed) pair. */
   def runPersonalizedPrepared(
-      deg: DataFrame, ed: DataFrame, seeds: DataFrame, rounds: Int,
-      broadcastRanks: Boolean = true): DataFrame = {
+      deg: DataFrame, ed: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     // node universe with the per-round restart mass folded in ONCE
     // (checkpointed, scanned every round) — the naive form re-joined
     // the seed frame per round and measured 8.8 s vs global
@@ -142,9 +130,8 @@ object PageRank {
     var ranks = uni.select(col("node"),
       when(col("restart") > 0, 1000000L).otherwise(0L).as("rank"))
     (0 until rounds).foreach { _ =>
-      val r = if (broadcastRanks) broadcast(ranks) else ranks
       val damped = ed
-        .join(r, ed("u") === ranks("node"))
+        .join(broadcast(ranks), ed("u") === ranks("node"))
         .select(col("v"), expr("rank div deg").as("contrib"))
         .groupBy(col("v"))
         .agg(expr("CAST((85 * sum(contrib)) div 100 AS BIGINT)").as("damped"))

@@ -32,14 +32,10 @@ object CurationQueries {
     * Every frame inside is lineage-truncated, so cached reuse plans
     * against shallow scans.
     */
-  private val saCache = new SessionScopedCache[
+  private val saArtifact = new SessionScopedCache[
     (org.apache.spark.sql.DataFrame, Long,
-      Seq[(Long, org.apache.spark.sql.DataFrame)])]
-
-  private def saArtifact(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, Long,
-          Seq[(Long, org.apache.spark.sql.DataFrame)]) =
-    saCache.getOrElseUpdate(s, dir) {
+      Seq[(Long, org.apache.spark.sql.DataFrame)])](
+    "CurationQueries.saArtifact", (s, dir) => {
       val chars = graft.operators.DenseId.withDenseId(
         Tables.documents(s, dir).filter(col("doc_id") < 40)
           .select(col("doc_id"),
@@ -52,16 +48,7 @@ object CurationQueries {
         .localCheckpoint()
       val rounds = graft.operators.SuffixArray.rounds(chars)
       (chars, chars.count(), rounds)
-    }
-
-  /** Bench warm-up face of the SA artifact ([[IvfArtifacts.warm]]'s
-    * rationale): run the doubling rounds untimed so the first SA
-    * consumer doesn't record the index build as its own cost.
-    */
-  def warmArtifacts(s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    saArtifact(s, dir)
-    ()
-  }
+    })
 
   val defs: Map[String, QueryDef] = Map(
 

@@ -45,13 +45,9 @@ object GraphLearnQueries {
     * was a third wasted shuffle (row multiset unchanged, so every
     * consumer's result is bit-identical).
     */
-  private val tradeGraphCache =
-    new SessionScopedCache[(org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame)]
-
-  private[graft] def tradeGraph(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    tradeGraphCache.getOrElseUpdate(s, dir) {
+  private[graft] val tradeGraph = new SessionScopedCache[
+    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
+    "GraphLearnQueries.tradeGraph", (s, dir) => {
       val b = Tables.lineitem(s, dir)
         .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
         .select(
@@ -62,7 +58,7 @@ object GraphLearnQueries {
       val sym = b.unionByName(b.select(col("v").as("u"), col("u").as("v")))
         .localCheckpoint()
       (b, sym)
-    }
+    })
 
   private[graft] def edgesFrame(s: org.apache.spark.sql.SparkSession, dir: String) =
     tradeGraph(s, dir)._2
@@ -79,12 +75,8 @@ object GraphLearnQueries {
     * re-ran the same 4-way lineitem⋈orders⋈customer⋈supplier join;
     * the artifact is ≤625 checkpointed rows.
     */
-  private val nationFlowCache =
-    new SessionScopedCache[org.apache.spark.sql.DataFrame]
-
-  private[graft] def nationFlow(s: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
-    nationFlowCache.getOrElseUpdate(s, dir) {
+  private[graft] val nationFlow = new SessionScopedCache[org.apache.spark.sql.DataFrame](
+    "GraphLearnQueries.nationFlow", (s, dir) =>
       Tables.lineitem(s, dir)
         .join(Tables.orders(s, dir), col("o_orderkey") === col("l_orderkey"))
         .join(Tables.customer(s, dir), col("c_custkey") === col("o_custkey"))
@@ -94,8 +86,7 @@ object GraphLearnQueries {
           col("c_nationkey").cast("long").as("v"))
         .agg(count(lit(1)).as("cnt"),
           min(datediff(col("l_shipdate"), col("o_orderdate"))).cast("long").as("w"))
-        .localCheckpoint()
-    }
+        .localCheckpoint())
 
   /** Quantized-embedding feature frame (id, dim, x, y) with the
     * alternating-sign linear TEACHER label y = sign(Σ (−1)^d·x_d) —
@@ -129,18 +120,13 @@ object GraphLearnQueries {
     * (session, corpus); the model is 5×64 longs + 5 stat rows, a
     * driver-side artifact like the IVF codebooks.
     */
-  private val perceptronCache =
-    new SessionScopedCache[(org.apache.spark.sql.DataFrame,
-      Seq[Array[Long]], Seq[Perceptron.RoundStat])]
-
-  private def perceptronModel(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, Seq[Array[Long]],
-        Seq[Perceptron.RoundStat]) =
-    perceptronCache.getOrElseUpdate(s, dir) {
+  private val perceptronModel = new SessionScopedCache[
+    (org.apache.spark.sql.DataFrame, Seq[Array[Long]], Seq[Perceptron.RoundStat])](
+    "GraphLearnQueries.perceptronModel", (s, dir) => {
       val feats = perceptronFeatures(s, dir)
       val (hist, stats) = Perceptron.train(feats, dims = 64, rounds = 5)
       (feats, hist, stats)
-    }
+    })
 
   /** Session-scoped ε-PAIR artifacts (r15): the exact blocked
     * ε-neighborhood graph at the fixture eps (consumed by
@@ -150,30 +136,20 @@ object GraphLearnQueries {
     * twice per sweep. Checkpointed; dbscanCensus consumes them
     * directly (it no longer re-checkpoints its input).
     */
-  private val exactEpsPairsCache =
-    new SessionScopedCache[org.apache.spark.sql.DataFrame]
-
-  private def exactEpsPairs(s: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
-    exactEpsPairsCache.getOrElseUpdate(s, dir) {
+  private val exactEpsPairs = new SessionScopedCache[org.apache.spark.sql.DataFrame](
+    "GraphLearnQueries.exactEpsPairs", (s, dir) =>
       graft.operators.Similarity.epsNeighborPairsBlocked(
         Tables.embeddings(s, dir), "vec_id", "embedding", eps = 0.33)
         .select(col("i"), col("j"))
-        .localCheckpoint()
-    }
+        .localCheckpoint())
 
-  private val routedEpsPairsCache =
-    new SessionScopedCache[org.apache.spark.sql.DataFrame]
-
-  private def routedEpsPairs(s: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
-    routedEpsPairsCache.getOrElseUpdate(s, dir) {
+  private val routedEpsPairs = new SessionScopedCache[org.apache.spark.sql.DataFrame](
+    "GraphLearnQueries.routedEpsPairs", (s, dir) =>
       graft.operators.Similarity.epsNeighborPairsIvfWithCentroids(
         Tables.embeddings(s, dir), "vec_id", "embedding", eps = 0.33,
         IvfArtifacts.centroids(s, dir), nprobe = 8)
         .select(col("i"), col("j"))
-        .localCheckpoint()
-    }
+        .localCheckpoint())
 
   private val perceptronFeaturesSql =
     """q AS (SELECT vec_id AS id,
@@ -205,10 +181,9 @@ object GraphLearnQueries {
     }.mkString
 
   /** Nation-grain trade graph with exact negated-cents weights — the
-    * mst_trade_backbone input, shared with graft.Explain's
-    * representative-round audit.
+    * mst_trade_backbone input.
     */
-  private[graft] def mstTradeEdges(
+  private def mstTradeEdges(
       s: org.apache.spark.sql.SparkSession, dir: String) = {
     val rev = Tables.lineitem(s, dir)
       .join(Tables.orders(s, dir), col("o_orderkey") === col("l_orderkey"))
@@ -250,16 +225,12 @@ object GraphLearnQueries {
     * the star). Both frames are lineage-truncated (lpaCommunities
     * checkpoints per phase), so cached reuse plans shallowly.
     */
-  private val lpaCache =
-    new SessionScopedCache[(org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame)]
-
-  private def lpaPartition(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    lpaCache.getOrElseUpdate(s, dir) {
+  private val lpaPartition = new SessionScopedCache[
+    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
+    "GraphLearnQueries.lpaPartition", (s, dir) => {
       val e = thresholdEdges(s, dir).localCheckpoint()
       (e, GraphOps.lpaCommunities(e, maxRounds = 6))
-    }
+    })
 
   /** Session-scoped SEMANTIC-GRAPH artifact (r14): the IVF-routed
     * k=5 / nprobe=8 kNN graph over the embeddings corpus and its
@@ -271,35 +242,16 @@ object GraphLearnQueries {
     * is the same load-once/query-many case one level up. Both frames
     * lineage-truncated; consumers drop their per-query re-checkpoints.
     */
-  private val knnGraphCache =
-    new SessionScopedCache[(org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame)]
-
-  private[graft] def knnGraph(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    knnGraphCache.getOrElseUpdate(s, dir) {
+  private[graft] val knnGraph = new SessionScopedCache[
+    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
+    "GraphLearnQueries.knnGraph", (s, dir) => {
       val g = graft.operators.KnnGraph.buildWithCentroids(
         Tables.embeddings(s, dir), "vec_id", "embedding", k = 5,
         IvfArtifacts.centroids(s, dir), nprobe = 8)
         .localCheckpoint()
       val mutual = graft.operators.KnnGraph.mutualEdges(g).localCheckpoint()
       (g, mutual)
-    }
-
-  /** Bench warm-up face of the LPA artifact ([[IvfArtifacts.warm]]'s
-    * rationale): converge the partition untimed so the first LPA
-    * consumer doesn't record the propagation as its own cost.
-    */
-  def warmArtifacts(s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    lpaPartition(s, dir)
-    tradeGraph(s, dir) // r14: 9 consumers (kcore, bfs, deepwalk, …)
-    nationFlow(s, dir) // r14: 6 consumers (diameter, stress, scc, …)
-    knnGraph(s, dir) // r14: 8 consumers (semdedup, triangles, …)
-    perceptronModel(s, dir) // r15: 3 consumers (weights, errors, margins)
-    exactEpsPairs(s, dir) // r15: 2 consumers (dbscan exact, recall truth)
-    routedEpsPairs(s, dir) // r15: 2 consumers (dbscan routed, recall)
-    ()
-  }
+    })
 
   /** DBSCAN chain over an ε-pair frame `(i, j)` (the full directed/
     * symmetric adjacency): cores = degree ≥ 3, clusters = pointer-jump
@@ -313,10 +265,11 @@ object GraphLearnQueries {
   private def dbscanCensus(
       emb: org.apache.spark.sql.DataFrame,
       pairsIn: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    // pairsIn must arrive MATERIALIZED (both callers pass the shared
-    // checkpointed ε-pair artifacts, r15) — it feeds degrees,
-    // core-core edges, and borders, all over the artifact's blocks
-    val pairs = pairsIn.select(col("i"), col("j"))
+    // pairsIn feeds degrees, core-core edges, and borders, so it must
+    // arrive materialized (both callers pass the shared checkpointed
+    // ε-pair artifacts, r15)
+    val pairs = graft.operators.Materialized.require(pairsIn, "dbscanCensus pairs")
+      .select(col("i"), col("j"))
     val core = pairs.groupBy(col("i")).agg(count(lit(1)).as("d"))
       .filter(col("d") >= 3).select(col("i").as("id"))
       .localCheckpoint() // feeds two semi-joins, the anti-join, labels

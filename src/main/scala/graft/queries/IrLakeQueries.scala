@@ -38,12 +38,8 @@ object IrLakeQueries {
     * DenseId numbering passes (six passes for one ranking table).
     * Built once per (session, corpus), checkpointed.
     */
-  private val supplierRanksCache =
-    new SessionScopedCache[org.apache.spark.sql.DataFrame]
-
-  private def supplierRanks(s: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
-    supplierRanksCache.getOrElseUpdate(s, dir) {
+  private val supplierRanks = new SessionScopedCache[org.apache.spark.sql.DataFrame](
+    "IrLakeQueries.supplierRanks", (s, dir) => {
       val m = Tables.lineitem(s, dir)
         .groupBy(col("l_suppkey").cast("long").as("sk"))
         .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"),
@@ -54,16 +50,7 @@ object IrLakeQueries {
           DenseId.withDenseId(acc, Seq(c.desc, col("sk")), name)
         }
         .localCheckpoint()
-    }
-
-  /** Bench warm-up face of [[supplierRanks]] (the artifact pre-warm
-    * convention): rank once untimed so the alphabetically-first
-    * consumer doesn't record the shared build as its own cost.
-    */
-  def warmArtifacts(s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    supplierRanks(s, dir)
-    ()
-  }
+    })
 
   val defs: Map[String, QueryDef] = Map(
 

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Tables
 
 /** Session-scoped TRAINED COARSE QUANTIZER for the embeddings corpus —
@@ -20,27 +18,12 @@ import graft.Tables
   */
 object IvfArtifacts {
 
-  private val cache = new SessionScopedCache[IndexedSeq[IndexedSeq[Double]]]
-  private val lakeCache = new SessionScopedCache[String]
-
-  /** Bench warm-up face: pre-train both artifacts UNTIMED so the
-    * alphabetically-first consumer query doesn't absorb the shared
-    * training into its recorded sweep number (r12: semdedup swept
-    * 13.4 s vs its 5.7–8.3 s iso band — pure accounting).
-    */
-  def warm(s: SparkSession, dir: String): Unit = {
-    centroids(s, dir)
-    lakePath(s, dir)
-    ()
-  }
-
-  def centroids(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[Double]] =
-    cache.getOrElseUpdate(s, dir) {
+  val centroids = new SessionScopedCache[IndexedSeq[IndexedSeq[Double]]](
+    "IvfArtifacts.centroids", (s, dir) =>
       graft.operators.IvfIndex.trainCentroids(
         Tables.embeddings(s, dir), "vec_id", "embedding", nlist = 16,
         sampleSize = 10000, iters = 5, seed = 42L)
-        .map(_.toIndexedSeq).toIndexedSeq
-    }
+        .map(_.toIndexedSeq).toIndexedSeq)
 
   /** The trained index PERSISTED as a lake artifact
     * ([[graft.operators.IvfStore]]: centroids + inverted lists as
@@ -50,12 +33,12 @@ object IvfArtifacts {
     * cross-job round-trip: train → persist → load → route, with
     * routing bit-identical to the in-memory trained path.
     */
-  def lakePath(s: SparkSession, dir: String): String =
-    lakeCache.getOrElseUpdate(s, dir) {
+  val lakePath = new SessionScopedCache[String](
+    "IvfArtifacts.lakePath", (s, dir) => {
       val path = TmpPaths.perJvm("graft_ivf_lake", dir)
       graft.operators.IvfStore.build(
         Tables.embeddings(s, dir), "vec_id", "embedding", path,
         centroids(s, dir))
       path
-    }
+    })
 }

@@ -38,10 +38,9 @@ object SelectionEmbedQueries {
     "list_filter(string_split_regex(lower(coalesce(text, '')), '\\s+'), t -> len(t) > 0)"
 
   /** Quantized-integer point frame of the k-center traversal
-    * (vec_id, exact-double grid coordinates, self-dot), checkpointed —
-    * shared with graft.Explain's representative-round audit.
+    * (vec_id, exact-double grid coordinates, self-dot), checkpointed.
     */
-  private[graft] def kcenterPts(
+  private def kcenterPts(
       s: org.apache.spark.sql.SparkSession, dir: String) =
     Tables.embeddings(s, dir)
       .select(col("vec_id"),
@@ -54,7 +53,7 @@ object SelectionEmbedQueries {
     * 1-row center (the aa − 2ab + bb identity) — the k-center round's
     * distance frame.
     */
-  private[graft] def kcenterDistTo(
+  private def kcenterDistTo(
       pts: org.apache.spark.sql.DataFrame,
       center: org.apache.spark.sql.DataFrame) =
     pts.crossJoin(broadcast(center

@@ -31,23 +31,10 @@ object SketchStatsQueries {
     * ppr each re-derived the identical pair (one degree agg + one
     * join + checkpoint per query).
     */
-  private val preparedEdgesCache =
-    new SessionScopedCache[(org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame)]
-
-  private def preparedTradeEdges(
-      s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    preparedEdgesCache.getOrElseUpdate(s, dir) {
-      PageRank.prepare(GraphLearnQueries.edgesFrame(s, dir))
-    }
-
-  /** Bench warm-up face of [[preparedTradeEdges]] (the artifact
-    * pre-warm convention). */
-  def warmArtifacts(s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    preparedTradeEdges(s, dir)
-    ()
-  }
+  private val preparedTradeEdges = new SessionScopedCache[
+    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
+    "SketchStatsQueries.preparedTradeEdges",
+    (s, dir) => PageRank.prepare(GraphLearnQueries.edgesFrame(s, dir)))
 
   private val toksSql =
     "list_filter(string_split_regex(lower(coalesce(text, '')), '\\s+'), t -> len(t) > 0)"

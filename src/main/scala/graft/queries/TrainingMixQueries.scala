@@ -1156,12 +1156,11 @@ object TrainingMixQueries {
     "submodular_source_select" -> submodularDef)
 
   /** Distinct (source, bigram) universe of the submodular selection,
-    * checkpointed — shared with graft.Explain's representative-round
-    * audit. sequence(0, -2) would step BACKWARDS in Spark, so docs
-    * with < 2 tokens are filtered (they contribute no bigrams on
+    * checkpointed. sequence(0, -2) would step BACKWARDS in Spark, so
+    * docs with < 2 tokens are filtered (they contribute no bigrams on
     * either engine — oracle-neutral).
     */
-  private[graft] def submodularBigrams(
+  private def submodularBigrams(
       s: org.apache.spark.sql.SparkSession, dir: String) =
     Tables.documents(s, dir)
       .select(col("source"), TextOps.tokens(col("text")).as("toks"))

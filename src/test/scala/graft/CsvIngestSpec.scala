@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.TestListenerBus
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.sources.CsvIngest
@@ -126,11 +126,11 @@ class CsvIngestSpec extends SparkSuite {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    TestListenerBus.drain(spark.sparkContext)
+    ListenerBusDrain.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       CsvIngest(spark, path)
-      TestListenerBus.drain(spark.sparkContext)
+      ListenerBusDrain.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get == 0, s"CsvIngest ran ${jobs.get} Spark jobs")
   }

@@ -249,7 +249,7 @@ class MefPipelineSpec extends SparkSuite {
 
   /** Names of the actions `body` runs on this session, in order. */
   private def actionsOf(body: => Unit): Seq[String] = {
-    import org.apache.spark.TestListenerBus
+    import org.apache.spark.ListenerBusDrain
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -257,9 +257,9 @@ class MefPipelineSpec extends SparkSuite {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = names.add(funcName)
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = names.add(funcName)
     }
-    TestListenerBus.drain(spark.sparkContext)
+    ListenerBusDrain.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
-    try { body; TestListenerBus.drain(spark.sparkContext) }
+    try { body; ListenerBusDrain.drain(spark.sparkContext) }
     finally spark.listenerManager.unregister(listener)
     names.toArray(Array.empty[String]).toSeq
   }
