@@ -19,11 +19,22 @@ import scala.collection.immutable.ListMap
   * `artifact_s`, each artifact's own build seconds
   * ([[queries.SessionScopedCache.warmAll]]).
   *
+  * Both lines also carry `git_sha`, the checkout's `git rev-parse HEAD`
+  * (`null` when git or the repository is unavailable), so a recorded
+  * line names the code it measured.
+  *
   * A query that throws is reported in an "errors" list (and its name
   * keyed to -1 in "queries") instead of silently contributing elapsed
   * time to the total.
   */
 object Bench {
+
+  /** `git rev-parse HEAD` of the working directory, if git answers. */
+  private def gitSha: Option[String] =
+    try Some(scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+      .!!(scala.sys.process.ProcessLogger(_ => ())).trim)
+    catch { case scala.util.control.NonFatal(_) => None }
+
   def main(args: Array[String]): Unit = {
     val sfDir = Sessions.sfDir
     val nameFilter = args.headOption
@@ -77,10 +88,11 @@ object Bench {
     }
     val codegenClasses = Sessions.codegenClasses - classes0
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
+    val sha = gitSha.orNull
     def line(fields: (String, Any)*) = Sessions.json(ListMap(
       Seq("metric" -> "total", "value" -> total, "unit" -> "sec") ++ fields ++
         Seq("errors" -> errors, "sf" -> sfDir, "cpus" -> Sessions.cpus,
-          "codegen_classes" -> codegenClasses): _*))
+          "git_sha" -> sha, "codegen_classes" -> codegenClasses): _*))
     val full = line("queries" -> ListMap(results: _*), "warm_s" -> warmS,
       "artifact_s" -> ListMap(artifactS: _*))
     println(full)

@@ -17,8 +17,10 @@ import org.apache.spark.sql.SparkSession
   * - codegen cache of [[CodegenCacheEntries]] classes, not Spark's 100.
   *   Measured on a 4-core host (perfbench inputs): one monthly op
   *   (ingest, `Star.append`, A4 refresh) compiled 274-322 classes and a
-  *   cold full load 308, 124 of them in `Validate`, so the default
-  *   cache evicted every class before the next op asked for it again.
+  *   cold full load 308, so the default cache evicted every class
+  *   before the next op asked for it again. (`Validate` then compiled
+  *   124 of them, one plan per check; as four stacked plan shapes it
+  *   compiles 60.)
   *   At 2000, a month replayed on an unchanged star compiles 6-12
   *   classes instead of 318; a month on a grown star still compiles
   *   125-137, because each append adds a union child to the dims and so
@@ -104,11 +106,13 @@ object Sessions {
 
   /** JSON text of `v`: a `Map` is an object in its iteration order
     * (`ListMap` keeps field order), any other collection an array, a
-    * string a [[jsonString]], anything else its `toString` (numbers).
+    * string a [[jsonString]], `null` JSON's null, anything else its
+    * `toString` (numbers).
     * `colon` separates keys from values: Verify's oracle_sql.json keeps
     * its historical `": "`, the bench lines are compact.
     */
   def json(v: Any, colon: String = ":"): String = v match {
+    case null => "null"
     case s: String => jsonString(s)
     case m: collection.Map[_, _] =>
       m.map { case (k, x) => jsonString(k.toString) + colon + json(x, colon) }

@@ -1,6 +1,6 @@
 package graft.mef
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,7 +16,8 @@ import graft.mef.MefSchema.DimSpec
   *    deterministic across runs, unlike SERIAL insertion order. They are
   *    internal plumbing: every observable query keys on natural
   *    attributes. (The fact side never sorts. The ranking window runs on
-  *    one partition; [[build]] counts the consolidated grain once, and
+  *    one partition; [[build]] observes the consolidated grain's row
+  *    count while the grain checkpoints (no job of its own), and
   *    since no dim has more keys than the grain has rows, every dim
   *    goes straight to the window while that count is within
   *    [[DimWindowMaxRows]]. Only above it does each dim take
@@ -98,13 +99,19 @@ object Star {
     * builds + the fact resolution would still re-analyze the whole
     * scan+clean+Transform subtree 8 times; the checkpoint plans them
     * against a shallow table scan.
+    *
+    * `rows`, when given, observes the grain's row count (`"rows"`) as
+    * the checkpoint runs: an `Observation` rides the checkpoint's own
+    * job, where a `count()` would be a job of two stages.
     */
-  private def consolidateGrain(normalized: DataFrame): DataFrame = {
+  private def consolidateGrain(
+      normalized: DataFrame, rows: Option[Observation] = None): DataFrame = {
     val grainCols = ("ano_eje" +: "mes_eje" +: MefSchema.dims.flatMap(_.allCols)).distinct
     val preAggs = MefSchema.measures.map(m => sum(col(m)).as(m))
-    normalized
+    val grain = normalized
       .groupBy(grainCols.map(col): _*)
       .agg(preAggs.head, preAggs.tail: _*)
+    rows.fold(grain)(grain.observe(_, count(lit(1)).as("rows")))
       .localCheckpoint()
   }
 
@@ -181,12 +188,14 @@ object Star {
     // residual duplicates (e.g. same natural key with inconsistent
     // attributes), so semantics equal the reference's per-batch A1 +
     // unique-grain sink.
-    val grain = consolidateGrain(normalizedIn)
+    val grainRows = Observation("grain")
+    val grain = consolidateGrain(normalizedIn, Some(grainRows))
     val tiempo = dimTiempo(spark)
-    // A dim has at most as many keys as the grain has rows, so one count
-    // of the checkpointed grain bounds every dim: under the window bound
-    // no dim needs buildDim's own checkpoint + count probe.
-    val bounded = grain.count() <= DimWindowMaxRows
+    // A dim has at most as many keys as the grain has rows, so the grain's
+    // row count bounds every dim: under the window bound no dim needs
+    // buildDim's own checkpoint + count probe. The count is observed while
+    // the checkpoint runs, so it costs no job of its own.
+    val bounded = grainRows.get("rows").asInstanceOf[Long] <= DimWindowMaxRows
     // Dims and the consolidated fact materialize too: the warehouse
     // contract is load-once/query-many, and without them every view or
     // analytic re-runs 7 dim builds + 7 FK joins + the final grain

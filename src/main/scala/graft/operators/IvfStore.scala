@@ -41,10 +41,7 @@ import graft.functions.exprs.{centroidIds, vecDot}
   * 100 TB shape: build is one map-only scan (assignment is a
   * broadcast-kernel projection) plus one parquet write; the store is
   * corpus-sized but never collects — only the O(nlist × dim) centroid
-  * table crosses to the driver at probe time. [[append]] assigns
-  * map-side with the STORED centroids and upserts by vec_id, so
-  * re-delivered batches are exact no-ops; at 100 TB an append-only
-  * write + Compactor pass replaces the rewrite.
+  * table crosses to the driver at probe time.
   */
 object IvfStore {
 
@@ -77,9 +74,7 @@ object IvfStore {
     * lists — the tombstone set is the only thing written (idempotent
     * key-upsert, so a re-delivered purge request is an exact no-op).
     * [[compact]] materializes the purge (drops the rows, clears the
-    * tombstones); [[append]] of a previously deleted vec_id re-ingests
-    * it (un-tombstones — a post-purge write is a legitimate new
-    * record, not a resurrection of the purged one).
+    * tombstones).
     */
   def delete(
       spark: SparkSession, path: String, victims: DataFrame,
@@ -101,30 +96,9 @@ object IvfStore {
       broadcast(spark.read.parquet(tp)), Seq("vec_id"), "left_anti")
   }
 
-  /** Assign a new batch with the STORED centroids and upsert by
-    * vec_id — re-delivery is an exact no-op (the PqStore.append rule:
-    * encode parameters live in the index, not at call sites).
-    */
-  def append(
-      spark: SparkSession, path: String, batch: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val cs = centroids(spark, path)
-    val assigned = batch.select(
-      col(idCol).cast("long").as("vec_id"),
-      element_at(centroidIds(col(vecCol), cs, 1), 1).as("list_id"),
-      col(vecCol).as("embedding"),
-      Similarity.l2Norm(col(vecCol)).as("norm_n"))
-    graft.sources.ParquetMerge.upsert(spark, listsPath(path), assigned, Seq("vec_id"))
-    // re-ingest after delete is a new record: un-tombstone the batch
-    if (graft.sources.HPath.exists(spark, tombstonesPath(path)))
-      graft.sources.ParquetMerge.deleteKeys(
-        spark, tombstonesPath(path),
-        batch.select(col(idCol).cast("long").as("vec_id")), Seq("vec_id"))
-  }
-
   /** Compact the store into ONE artifact at `out` — the
-    * [[LshIndex.compact]] contract for the vector tier: appended
-    * deltas' small files re-lay to ≈targetBytes files, the LIVE row
+    * [[LshIndex.compact]] contract for the vector tier: the lists'
+    * small files re-lay to ≈targetBytes files, the LIVE row
     * set is untouched, so probing the compacted store is identical
     * (IvfStoreSpec asserts it). Tombstoned rows drop for good and the
     * compacted store carries no tombstones — compaction is where a

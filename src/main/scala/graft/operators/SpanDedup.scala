@@ -192,20 +192,6 @@ object SpanDedup {
       .agg(countDistinct(col(idCol)).as("n_docs"))
   }
 
-  /** Fold a batch census into an archive census — counts ADD because
-    * batches carry disjoint doc ids (the loader's contract, same as
-    * IncrementalDedup's id-keyed appends): distinct-doc counts over
-    * disjoint doc sets are additive, so
-    * mergeCensus(spanCensus(A), spanCensus(B)) ≡ spanCensus(A ∪ B)
-    * exactly (spec-asserted). One keyed outer join at census grain —
-    * never touches document text.
-    */
-  def mergeCensus(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("span_hash"), col("n_docs"))
-      .unionByName(b.select(col("span_hash"), col("n_docs")))
-      .groupBy(col("span_hash"))
-      .agg(sum(col("n_docs")).as("n_docs"))
-
   /** INCREMENTAL substring excision: clean a FRESH batch against a
     * PERSISTED archive census without re-scanning archive text. A
     * batch span is duplicated when its archive count plus its

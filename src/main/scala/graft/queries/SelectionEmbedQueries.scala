@@ -82,23 +82,29 @@ object SelectionEmbedQueries {
           kcenterDistTo(pts, center)
         val firstId = pts.agg(min(col("vec_id"))).collect()(0).getLong(0)
         var m = distTo(pts.filter(col("vec_id") === firstId)).localCheckpoint()
-        val out = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
-        out += ((1, firstId, m.agg(max(col("dist"))).collect()(0).getLong(0)))
+        // centers(r - 1) = round r's center. Round r's radius is max(dist)
+        // of its m, which is the dist of round r + 1's argmax pick, so
+        // only the last round reads the radius with its own job.
+        val centers = scala.collection.mutable.ArrayBuffer(firstId)
+        val radii = scala.collection.mutable.ArrayBuffer[Long]()
         var r = 2
         while (r <= 5) {
           val pick = m.orderBy(col("dist").desc, col("vec_id")).limit(1)
             .collect()(0)
           val cid = pick.getLong(0)
+          radii += pick.getLong(1)
+          centers += cid
           val d = distTo(pts.filter(col("vec_id") === cid))
           m = m.join(d.withColumnRenamed("dist", "d2"), Seq("vec_id"))
             .select(col("vec_id"),
               when(col("d2") < col("dist"), col("d2")).otherwise(col("dist"))
                 .as("dist"))
             .localCheckpoint()
-          out += ((r, cid, m.agg(max(col("dist"))).collect()(0).getLong(0)))
           r += 1
         }
-        out.toSeq.toDF("round", "center_id", "radius").orderBy(col("round"))
+        radii += m.agg(max(col("dist"))).collect()(0).getLong(0)
+        centers.indices.map(i => (i + 1, centers(i), radii(i)))
+          .toDF("round", "center_id", "radius").orderBy(col("round"))
       }, {
         val kc = new StringBuilder(
           """WITH q AS MATERIALIZED (

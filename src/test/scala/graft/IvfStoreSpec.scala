@@ -6,7 +6,7 @@ import graft.operators.{IvfIndex, IvfStore}
 
 /** Persisted IVF-Flat index: probe-from-store must equal the in-memory
   * trained search bit-for-bit (centroids and float vectors round-trip
-  * parquet exactly; assignment uses the same kernel), appends must be
+  * parquet exactly; assignment uses the same kernel), deletes must be
   * idempotent under re-delivery, and only the O(nlist×dim) centroid
   * table may cross to the driver.
   */
@@ -47,27 +47,10 @@ class IvfStoreSpec extends SparkSuite {
     }
   }
 
-  test("append is idempotent; new vectors become probeable from the store") {
-    val path = freshPath()
-    IvfStore.build(emb.filter($"vec_id" < 400), "vec_id", "embedding", path, cs)
-    val n0 = spark.read.parquet(s"$path/lists").count()
-    IvfStore.append(spark, path, emb.filter($"vec_id" < 100), "vec_id", "embedding")
-    assert(spark.read.parquet(s"$path/lists").count() == n0)
-    IvfStore.append(spark, path, emb.filter($"vec_id" >= 400), "vec_id", "embedding")
-    assert(spark.read.parquet(s"$path/lists").count() == emb.count())
-    val after = IvfStore.probe(spark, path, probes, "vec_id", "embedding", 5, nprobe = 8)
-      .collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(2)))
-    val full = IvfIndex.searchWithCentroids(
-      emb, probes, "vec_id", "embedding", 5, cs, nprobe = 8)
-      .collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(2)))
-    assert(after == full && after.nonEmpty)
-  }
-
   test("compact preserves the store exactly: probe rows identical") {
     val raw = freshPath()
     val out = freshPath() + "/compacted"
-    IvfStore.build(emb.filter($"vec_id" < 300), "vec_id", "embedding", raw, cs)
-    IvfStore.append(spark, raw, emb.filter($"vec_id" >= 300), "vec_id", "embedding")
+    IvfStore.build(emb, "vec_id", "embedding", raw, cs)
     IvfStore.compact(spark, raw, out)
     assert(IvfStore.centroids(spark, out) == cs)
     val pa = IvfStore.probe(spark, raw, probes, "vec_id", "embedding", 5, nprobe = 8)
@@ -77,7 +60,7 @@ class IvfStoreSpec extends SparkSuite {
     assert(pa == pb && pa.nonEmpty)
   }
 
-  test("RTBF delete masks victims, re-delivery no-ops, compact materializes, re-ingest unmasks") {
+  test("RTBF delete masks victims, re-delivery no-ops, compact materializes") {
     val raw = freshPath()
     val out = freshPath() + "/compacted"
     IvfStore.build(emb, "vec_id", "embedding", raw, cs)
@@ -102,15 +85,6 @@ class IvfStoreSpec extends SparkSuite {
     val pc = IvfStore.probe(spark, out, probes, "vec_id", "embedding", 5, nprobe = 8)
       .collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(2)))
     assert(pc == got)
-    // re-ingest after purge is a NEW record: un-tombstoned, probeable
-    IvfStore.append(spark, raw, emb.filter($"vec_id" % 10 === 3), "vec_id", "embedding")
-    assert(spark.read.parquet(s"$raw/tombstones").count() == 0)
-    val back = IvfStore.probe(spark, raw, probes, "vec_id", "embedding", 5, nprobe = 8)
-      .collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(2)))
-    val full = IvfIndex.searchWithCentroids(
-      emb, probes, "vec_id", "embedding", 5, cs, nprobe = 8)
-      .collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(2)))
-    assert(back == full)
   }
 
   test("compact into the same directory is refused even via an aliased path") {

@@ -138,15 +138,17 @@ class MefPipelineSpec extends SparkSuite {
     assert(raw.columns.head == " ano_eje ")
   }
 
+  /** A UTF-8 fixture CSV of the header and `rs`; its path. */
+  private def fixtureOf(rs: Seq[Seq[String]]): String = {
+    val dir = Files.createTempDirectory("mef_rows")
+    val p = dir.resolve("2024-Gasto-Mensual.csv")
+    val body = (header.map(h => "\"" + h + "\"").mkString(",") +:
+      rs.map(_.map(v => "\"" + v + "\"").mkString(","))).mkString("\n")
+    Files.write(p, body.getBytes(StandardCharsets.UTF_8))
+    p.toString
+  }
+
   test("incremental append ≡ full rebuild; ids preserved; re-delivery + conflicts no-op") {
-    def fixtureOf(rs: Seq[Seq[String]]): String = {
-      val dir = Files.createTempDirectory("mef_inc")
-      val p = dir.resolve("2024-Gasto-Mensual.csv")
-      val body = (header.map(h => "\"" + h + "\"").mkString(",") +:
-        rs.map(_.map(v => "\"" + v + "\"").mkString(","))).mkString("\n")
-      Files.write(p, body.getBytes(StandardCharsets.UTF_8))
-      p.toString
-    }
     // batch1 = month 1 + the invalid-time rows; batch2 = month 2
     val s1 = MefPipeline.buildFromCsv(spark, Seq(fixtureOf(rows.take(4))))
     val batch2 = Normalize(MefPipeline.transform(spark, Seq(fixtureOf(rows.drop(4)))))
@@ -222,46 +224,148 @@ class MefPipelineSpec extends SparkSuite {
   private def validateRows(s: Star.StarSchema): Seq[(String, String, Long)] =
     Validate.validate(spark, s).collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
 
+  /** Test-only reference: the 24 checks as 24 separate frames, one
+    * plan per check (Validate's earlier form), tagged and counted by
+    * one union. Validate's stacked shapes must give the same rows.
+    */
+  private def referenceRows(star: Star.StarSchema): Seq[(String, String, Long)] = {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit}
+
+    def dupGroups(df: DataFrame, cols: Seq[String]): DataFrame =
+      df.groupBy(cols.map(col): _*).count().filter(col("count") > 1)
+
+    def dangling(fk: String, dim: DataFrame): DataFrame =
+      star.fact.select(col(fk)).join(dim.select(col(fk)), Seq(fk), "left_anti")
+
+    val factChecks = Seq(
+      ("fact_gasto_mensual", "unique_8fk_grain", dupGroups(star.fact, MefSchema.factFks)),
+      ("fact_gasto_mensual", "fk_not_null",
+        star.fact.filter(MefSchema.factFks.map(col(_).isNull).reduce(_ || _))))
+    val fkIntegrity = MefSchema.dims.map { spec =>
+      ("fact_gasto_mensual", s"fk_${spec.id}_references_${spec.name}",
+        dangling(spec.id, star.dims(spec.name)))
+    } :+ ("fact_gasto_mensual", "fk_tiempo_id_references_dim_tiempo",
+      dangling("tiempo_id", star.dimTiempo))
+    val dimChecks = MefSchema.dims.flatMap { spec =>
+      val d = star.dims(spec.name)
+      Seq(
+        (spec.name, s"pk_${spec.id}_unique", dupGroups(d, Seq(spec.id))),
+        (spec.name, "natural_key_unique", dupGroups(d, spec.keys)))
+    }
+
+    val checks = (factChecks ++ fkIntegrity ++ dimChecks).zipWithIndex
+    val violations = checks
+      .map { case ((_, _, rows), i) => rows.select(lit(i).as("check")) }
+      .reduce(_ union _)
+      .groupBy("check").count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    checks.map { case ((table, constraint, _), i) => (table, constraint, violations.getOrElse(i, 0L)) }
+  }
+
+  /** Validate's rows equal the reference's, and the expected ones. */
+  private def assertValidates(s: Star.StarSchema, expected: Seq[(String, String, Long)]): Unit = {
+    val got = validateRows(s)
+    assert(got == referenceRows(s), "stacked shapes vs per-check reference")
+    assert(got == expected)
+  }
+
   test("§2.11: Validate's full 24-row output is exact on clean and corrupted stars") {
     import org.apache.spark.sql.functions.{col, lit, min, when}
-    assert(validateRows(star) == expectedChecks())
+    assertValidates(star, expectedChecks())
     // k duplicated grain rows: k duplicate groups
     val k = 2
-    assert(validateRows(star.copy(fact = star.fact.unionAll(star.fact.limit(k)))) ==
+    assertValidates(star.copy(fact = star.fact.unionAll(star.fact.limit(k))),
       expectedChecks("fact_gasto_mensual.unique_8fk_grain" -> k))
     // every fact row dangling on ejecutora_id
-    assert(validateRows(star.copy(fact = star.fact.withColumn("ejecutora_id", lit(999999)))) ==
+    assertValidates(star.copy(fact = star.fact.withColumn("ejecutora_id", lit(999999))),
       expectedChecks("fact_gasto_mensual.fk_ejecutora_id_references_dim_ejecutora" -> 3))
     // one null FK counts under fk_not_null AND under that FK's anti-join
     val first = star.fact.agg(min(col("tiempo_id"))).head.getInt(0)
     val nullMeta = star.fact.withColumn("meta_id",
       when(col("tiempo_id") === first, lit(null).cast("int")).otherwise(col("meta_id")))
-    assert(validateRows(star.copy(fact = nullMeta)) == expectedChecks(
+    assertValidates(star.copy(fact = nullMeta), expectedChecks(
       "fact_gasto_mensual.fk_not_null" -> 1,
       "fact_gasto_mensual.fk_meta_id_references_dim_meta" -> 1))
     // one duplicated dim row breaks both of its dim's uniques
     val ej = star.dims("dim_ejecutora")
     val dupDim = star.copy(dims = star.dims.updated("dim_ejecutora", ej.unionAll(ej.limit(1))))
-    assert(validateRows(dupDim) == expectedChecks(
+    assertValidates(dupDim, expectedChecks(
       "dim_ejecutora.pk_ejecutora_id_unique" -> 1,
       "dim_ejecutora.natural_key_unique" -> 1))
   }
 
-  /** Names of the actions `body` runs on this session, in order. */
-  private def actionsOf(body: => Unit): Seq[String] = {
+  test("Validate: double keys group as groupBy does (-0.0 = 0.0, NaN = NaN)") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    // four new rows under fresh ids, equal to an existing row's keys but
+    // tipo_transaccion: {-0.0, 0.0} and {NaN, NaN} are two duplicate groups
+    val cg = star.dims("dim_clasificador_gasto")
+    val traps = Seq((101, -0.0), (102, 0.0), (103, Double.NaN), (104, Double.NaN)).toDF("_id", "_t")
+    val extra = cg.limit(1).crossJoin(traps)
+      .withColumn("clasif_gasto_id", col("_id")).withColumn("tipo_transaccion", col("_t"))
+      .select(cg.columns.map(col): _*)
+    assert(extra.collect().map(_.getAs[Double]("tipo_transaccion")).count(_.equals(-0.0)) == 1,
+      "the -0.0 survives into the dim")
+    assertValidates(star.copy(dims = star.dims.updated("dim_clasificador_gasto", cg.unionAll(extra))),
+      expectedChecks("dim_clasificador_gasto.natural_key_unique" -> 2))
+  }
+
+  test("Validate: null natural keys group together; a shared id with distinct keys") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    // two rows whose natural key is null, under fresh ids: one key group
+    val ng = star.dims("dim_nivel_gobierno")
+    val nullKeys = ng.limit(1).crossJoin(spark.range(2).toDF("_i"))
+      .withColumn("nivel_gobierno_id", (col("_i") + 50).cast("int"))
+      .withColumn("nivel_gobierno_codigo", lit(null).cast("string"))
+      .select(ng.columns.map(col): _*)
+    assertValidates(star.copy(dims = star.dims.updated("dim_nivel_gobierno", ng.unionAll(nullKeys))),
+      expectedChecks("dim_nivel_gobierno.natural_key_unique" -> 1))
+    // E2 takes E1's id: one pk group, keys still distinct, and the fact
+    // rows that referenced E2's id now dangle
+    val ej = star.dims("dim_ejecutora")
+    val e1 = ej.filter(col("ejecutora_codigo") === "E1").head.getAs[Int]("ejecutora_id")
+    val shared = ej.withColumn("ejecutora_id", lit(e1))
+    val dangling = star.fact.filter(col("ejecutora_id") =!= e1).count()
+    assert(dangling == 1)
+    assertValidates(star.copy(dims = star.dims.updated("dim_ejecutora", shared)), expectedChecks(
+      "fact_gasto_mensual.fk_ejecutora_id_references_dim_ejecutora" -> dangling,
+      "dim_ejecutora.pk_ejecutora_id_unique" -> 1))
+  }
+
+  /** The actions `body` runs on this session, in order: name and query. */
+  private def queriesOf(body: => Unit): Seq[(String, org.apache.spark.sql.execution.QueryExecution)] = {
     import org.apache.spark.ListenerBusDrain
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val runs = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
     val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = names.add(funcName)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = names.add(funcName)
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = runs.add(funcName -> qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = runs.add(funcName -> qe)
     }
     ListenerBusDrain.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try { body; ListenerBusDrain.drain(spark.sparkContext) }
     finally spark.listenerManager.unregister(listener)
-    names.toArray(Array.empty[String]).toSeq
+    runs.toArray(Array.empty[(String, QueryExecution)]).toSeq
+  }
+
+  /** Names of the actions `body` runs on this session, in order. */
+  private def actionsOf(body: => Unit): Seq[String] = queriesOf(body).map(_._1)
+
+  /** Stages `body` completes on this session. */
+  private def stagesOf(body: => Unit): Int = {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
+    }
+    ListenerBusDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerBusDrain.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    stages.get
   }
 
   test("tripwire: Validate.validate runs exactly one action") {
@@ -270,13 +374,40 @@ class MefPipelineSpec extends SparkSuite {
     assert(validated == Seq("collect"), s"Validate ran ${validated.size} actions: $validated")
   }
 
-  test("tripwire: Star.build runs at most one count, not one per dim") {
+  test("tripwire: Validate.validate runs at most 6 stages (25 as one plan per check)") {
+    val built = star
+    val stages = stagesOf(Validate.validate(spark, built))
+    assert(stages <= 6, s"Validate ran $stages stages")
+  }
+
+  test("tripwire: Star.build runs no count") {
     val p = writeFixture("2024-Gasto-Mensual.csv", StandardCharsets.UTF_8)
     val normalized = Normalize(MefPipeline.transform(spark, Seq(p.toString)))
     var built: Star.StarSchema = null
     val building = actionsOf { built = Star.build(spark, normalized) }
-    assert(building.count(_ == "count") <= 1, s"Star.build actions: $building")
+    assert(!building.contains("count"), s"Star.build actions: $building")
     built.release()
+  }
+
+  test("empty input: no rows past P3, or an empty CSV, build an empty star that validates") {
+    val allInvalid = fixtureOf(rows.slice(2, 4)) // r3, r4: invalid time
+    val empty = {
+      val p = Files.createTempDirectory("mef_empty").resolve("2024-Gasto-Mensual.csv")
+      Files.write(p, Array.emptyByteArray)
+      p.toString
+    }
+    for (csv <- Seq(allInvalid, empty)) {
+      val normalized = Normalize(MefPipeline.transform(spark, Seq(csv)))
+      var built: Star.StarSchema = null
+      val building = queriesOf { built = Star.build(spark, normalized) }
+      // the grain's row count is observed on the checkpoint's own query
+      val observed = building.flatMap(_._2.observedMetrics.get("grain")).map(_.getAs[Long]("rows"))
+      assert(observed == Seq(0L), csv)
+      assert(built.fact.count() == 0 && built.dims.values.forall(_.count() == 0), csv)
+      assert(validateRows(built) == expectedChecks(), csv)
+      assert(Validate.holds(spark, built), csv)
+      built.release()
+    }
   }
 
   test("§2.11: column docs ride StructField metadata through Normalize") {

@@ -27,4 +27,10 @@ class SessionsSpec extends AnyFunSuite {
     assert(Sessions.json(ListMap("q1" -> "SELECT 1", "q2" -> "x\ny"), ": ") ==
       "{\"q1\": \"SELECT 1\",\"q2\": \"x\\ny\"}")
   }
+
+  test("json renders null as JSON null (the bench lines' git_sha without git)") {
+    val line = Sessions.json(ListMap("cpus" -> 4, "git_sha" -> null))
+    assert(line == """{"cpus":4,"git_sha":null}""")
+    assert(new ObjectMapper().readTree(line).get("git_sha").isNull)
+  }
 }

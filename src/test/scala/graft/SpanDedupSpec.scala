@@ -207,15 +207,4 @@ class SpanDedupSpec extends SparkSuite {
     assert(r(0).getAs[Long]("n_dropped") == 8L)
     assert(r(1).getAs[Long]("n_dropped") == 8L)
   }
-
-  test("census fold is exact: merge of batch censuses equals the union census") {
-    val merged = SpanDedup.mergeCensus(
-        SpanDedup.spanCensus(archive, "doc_id", "text", n = 8),
-        SpanDedup.spanCensus(batch, "doc_id", "text", n = 8))
-      .orderBy("span_hash").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val union = SpanDedup.spanCensus(
-        archive.unionByName(batch), "doc_id", "text", n = 8)
-      .orderBy("span_hash").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(merged.toSeq == union.toSeq)
-  }
 }
