@@ -250,10 +250,7 @@ object ScaleBench {
       val normalized = scaledNormalized(spark, sfDir, k)
       val nR = normalized.count()
       record("star_build", k, nR) {
-        val st = graft.mef.Star.build(spark, normalized)
-        val n = st.fact.count()
-        st.release()
-        n
+        graft.mef.Star.build(spark, normalized).fact.count()
       }
     }
 

@@ -1,66 +1,60 @@
 package graft.mef
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.mef.MefSchema.DimSpec
 
-/** Star-schema builder — replaces the loader's per-batch dim-cache /
-  * anti-join / JDBC-upsert dance (`etl/cargar_postgres.py:270-388`) with a
-  * declarative single-pass build: ~1 shuffle per dimension + 1 for the
-  * fact grain.
+/** Star-schema loader: the loader's per-batch dim-cache / anti-join /
+  * JDBC-upsert dance (`etl/cargar_postgres.py:270-388`) as ONE load
+  * path, [[append]]. A full load ([[build]]) is the first append, onto
+  * the [[empty]] star, exactly as the reference's full load is its
+  * first batch.
   *
   * Semantics decisions (SURVEY.md §7.4):
-  *  - Surrogate ids are dense `row_number` over the natural-key order —
-  *    deterministic across runs, unlike SERIAL insertion order. They are
-  *    internal plumbing: every observable query keys on natural
-  *    attributes. (The fact side never sorts. The ranking window runs on
-  *    one partition; [[build]] observes the consolidated grain's row
-  *    count while the grain checkpoints (no job of its own), and
-  *    since no dim has more keys than the grain has rows, every dim
-  *    goes straight to the window while that count is within
-  *    [[DimWindowMaxRows]]. Only above it does each dim take
-  *    [[buildDim]]'s count probe, which routes dims past the bound
+  *  - Surrogate ids are dense: a batch's new natural keys take the ids
+  *    after the dim's row count, in natural-key order (nulls first) —
+  *    the SERIAL analog, deterministic across runs, unlike SERIAL
+  *    insertion order. On a full load that is `row_number` over every
+  *    key. Ids are internal plumbing: every observable query keys on
+  *    natural attributes. (The fact side never sorts. The numbering
+  *    window runs on one partition; [[append]] observes the batch
+  *    grain's row count while the grain checkpoints (no job of its
+  *    own), and since no batch brings more new keys than its grain has
+  *    rows, every dim goes straight to the window while that count is
+  *    within [[DimWindowMaxRows]]. Only above it does each dim take
+  *    a checkpoint + count probe, which routes dims past the bound
   *    through the distributed [[graft.operators.DenseId]] numbering —
   *    identical ids, no single-executor bottleneck when a "dimension"
   *    turns out unbounded.)
-  *  - Each dim materializes ONCE: its deduped keys are ranked lazily
-  *    and the ranked dim is the one localCheckpoint [[build]] takes.
+  *  - Existing dim rows keep their ids and first-loaded attributes, a
+  *    fact grain row already present is left untouched (first write
+  *    wins on the 8-FK UNIQUE, `sql/CreacionDeDataWareHouse.sql:136-
+  *    137`) and re-delivering a loaded batch is a no-op: the loader's
+  *    `ON CONFLICT DO NOTHING` cross-batch semantics
+  *    (`etl/cargar_postgres.py:127-152,236-267`). On a one-shot load
+  *    this is the reference's within-batch consolidation.
   *  - Attribute recovery picks the lexicographically smallest attribute
   *    tuple per natural key (deterministic stand-in for the reference's
   *    nondeterministic first-insert-wins, `etl/cargar_postgres.py:359-360`).
-  *  - Two load paths: [[build]] (one-shot `groupBy(grain).sum` — equals
-  *    the reference's within-batch consolidation + conflict-drop on a
-  *    clean load, without the lossy cross-run drop) and [[append]]
-  *    (incremental, reproducing the loader's actual `ON CONFLICT DO
-  *    NOTHING` cross-batch semantics: id-preserving dim deltas,
-  *    first-write-wins fact merge, idempotent re-delivery).
   *  - Null natural keys resolve via null-safe equality (pandas `merge`
   *    matches NaN keys; plain Spark joins would drop them before the P4
   *    filter could count them).
   */
 object Star {
 
-  /** The star holds only its own tables: [[build]]'s consolidated grain
-    * is not kept, so its checkpoint blocks are freed (ContextCleaner)
-    * once the dims and fact exist.
+  /** The star holds only its own tables and each dim's row count
+    * (`rows`, by dim name). Ids are dense, so a dim's row count is
+    * also its max id: the offset its next load numbers from. A load's
+    * consolidated grain is not kept, so its checkpoint blocks are
+    * freed (ContextCleaner) once the dims and fact exist.
     */
   final case class StarSchema(
       dimTiempo: DataFrame,
       dims: Map[String, DataFrame],
-      fact: DataFrame) {
-    /** Release cache-manager state for this star's frames. Frames
-      * materialized via localCheckpoint (dims/fact since the
-      * lineage-truncation change) free their blocks when the backing
-      * RDDs are GC'd; unpersist here is a harmless no-op for those but
-      * still covers any persisted frames a caller composed on top.
-      */
-    def release(): Unit = {
-      dims.values.foreach(_.unpersist())
-      fact.unpersist()
-    }
-  }
+      fact: DataFrame,
+      rows: Map[String, Long])
 
   /** dim_tiempo: monthly spine 2010-01..2030-12, 252 rows, ids ordered by
     * date exactly like the SERIAL fill (`sql/CreacionDeDataWareHouse.sql:9-24`).
@@ -100,18 +94,17 @@ object Star {
     * scan+clean+Transform subtree 8 times; the checkpoint plans them
     * against a shallow table scan.
     *
-    * `rows`, when given, observes the grain's row count (`"rows"`) as
-    * the checkpoint runs: an `Observation` rides the checkpoint's own
-    * job, where a `count()` would be a job of two stages.
+    * `rows` observes the grain's row count (`"rows"`) as the
+    * checkpoint runs: an `Observation` rides the checkpoint's own job,
+    * where a `count()` would be a job of two stages.
     */
-  private def consolidateGrain(
-      normalized: DataFrame, rows: Option[Observation] = None): DataFrame = {
+  private def consolidateGrain(normalized: DataFrame, rows: Observation): DataFrame = {
     val grainCols = ("ano_eje" +: "mes_eje" +: MefSchema.dims.flatMap(_.allCols)).distinct
     val preAggs = MefSchema.measures.map(m => sum(col(m)).as(m))
-    val grain = normalized
+    normalized
       .groupBy(grainCols.map(col): _*)
       .agg(preAggs.head, preAggs.tail: _*)
-    rows.fold(grain)(grain.observe(_, count(lit(1)).as("rows")))
+      .observe(rows, count(lit(1)).as("rows"))
       .localCheckpoint()
   }
 
@@ -141,75 +134,64 @@ object Star {
       Duration.Inf).toMap
   }
 
-  /** Dense surrogate ids 1..n in natural-key order (nulls first). */
-  private def keyRank(spec: DimSpec) =
-    row_number().over(Window.orderBy(spec.keys.map(k => col(k).asc_nulls_first): _*))
+  /** Dense surrogate ids `offset`+1..`offset`+n over distinct natural
+    * `keys`, in natural-key order (nulls first): the single-partition
+    * `row_number` window, or with `dense` [[graft.operators.DenseId]]'s
+    * range-partitioned numbering, which assigns the IDENTICAL ids
+    * (natural keys are unique post-dedup, so the order is total;
+    * StarSkewSpec asserts id-for-id equality both ways).
+    */
+  private def numbered(keys: DataFrame, spec: DimSpec, offset: Long, dense: Boolean): DataFrame = {
+    val order = spec.keys.map(k => col(k).asc_nulls_first)
+    val ranked =
+      if (dense) graft.operators.DenseId.withDenseId(keys, order, spec.id)
+      else keys.withColumn(spec.id, row_number().over(Window.orderBy(order: _*)))
+    ranked.select((col(spec.id) + offset).cast("int").as(spec.id) +: spec.allCols.map(col): _*)
+  }
 
-  /** A bounded dim's ids: the single-partition ranking window. */
-  private def rankedDim(keys: DataFrame, spec: DimSpec): DataFrame =
-    keys.withColumn(spec.id, keyRank(spec)).select((spec.id +: spec.allCols).map(col): _*)
+  /** Ids after `offset` for distinct `keys` whose count is not known
+    * to be bounded: the keys materialize (localCheckpoint) and are
+    * counted so the numbering can route: at most `windowMaxRows` keep
+    * the single-partition window, more take
+    * [[graft.operators.DenseId]]. [[append]] runs this probe only when
+    * its batch grain exceeds [[DimWindowMaxRows]]; under it each dim
+    * delta materializes once, with no probe.
+    */
+  private def routed(keys: DataFrame, spec: DimSpec, offset: Long, windowMaxRows: Long): DataFrame = {
+    val snapped = keys.localCheckpoint()
+    val n = snapped.count()
+    require(offset + n <= Int.MaxValue,
+      s"dim ${spec.name} exceeds the int surrogate-id domain (${offset + n} rows)")
+    numbered(snapped, spec, offset, dense = n > windowMaxRows)
+  }
 
-  /** One attribute dimension whose size is not known to be bounded:
-    * distinct natural keys, deterministic representative attributes,
-    * dense surrogate id.
-    *
-    * The deduped keys materialize (localCheckpoint) and are counted so
-    * the id assignment can route: bounded dims (≤ `windowMaxRows`)
-    * keep the single-partition ranking window; larger dims take
-    * [[graft.operators.DenseId]]'s range-partitioned numbering, which
-    * assigns the IDENTICAL ids (row_number over the same asc_nulls_
-    * first key order — natural keys are unique post-dedup, so the
-    * order is total; StarSkewSpec asserts id-for-id equality both
-    * ways). [[build]] runs this probe only when its grain count exceeds
-    * [[DimWindowMaxRows]]; under it each dim materializes once, with
-    * no probe.
+  /** One attribute dimension of `normalized` whose size is not known to
+    * be bounded: distinct natural keys, deterministic representative
+    * attributes, dense surrogate ids after `offset`, routed by size.
     */
   def buildDim(
       normalized: DataFrame, spec: DimSpec,
-      windowMaxRows: Long = DimWindowMaxRows): DataFrame = {
-    val snapped = distinctKeys(normalized, spec).localCheckpoint()
-    val n = snapped.count()
-    if (n <= windowMaxRows) rankedDim(snapped, spec)
-    else {
-      require(n <= Int.MaxValue,
-        s"dim ${spec.name} exceeds the int surrogate-id domain ($n rows)")
-      graft.operators.DenseId.withDenseId(
-        snapped, spec.keys.map(k => col(k).asc_nulls_first), spec.id)
-        .withColumn(spec.id, col(spec.id).cast("int"))
-        .select((spec.id +: spec.allCols).map(col): _*)
-    }
-  }
+      windowMaxRows: Long = DimWindowMaxRows, offset: Long = 0L): DataFrame =
+    routed(distinctKeys(normalized, spec), spec, offset, windowMaxRows)
 
-  /** Full star build from the normalized frame: all dims + the
-    * FK-resolved, FK-complete, grain-consolidated fact.
+  /** The star before its first load: dim_tiempo, and the 7 dims and the
+    * fact as rowless `LocalRelation`s with the schemas a load of
+    * `normalized` gives them (analysis only, no job). Catalyst prunes
+    * the anti-joins against them and the unions with them while
+    * optimizing, so the first [[append]] plans as a one-shot build.
     */
-  def build(spark: SparkSession, normalizedIn: DataFrame): StarSchema = {
-    // The final groupBy(fks) in resolveFact still consolidates any
-    // residual duplicates (e.g. same natural key with inconsistent
-    // attributes), so semantics equal the reference's per-batch A1 +
-    // unique-grain sink.
-    val grainRows = Observation("grain")
-    val grain = consolidateGrain(normalizedIn, Some(grainRows))
+  def empty(spark: SparkSession, normalized: DataFrame): StarSchema = {
+    def none(shape: DataFrame) = spark.createDataFrame(java.util.List.of[Row](), shape.schema)
     val tiempo = dimTiempo(spark)
-    // A dim has at most as many keys as the grain has rows, so the grain's
-    // row count bounds every dim: under the window bound no dim needs
-    // buildDim's own checkpoint + count probe. The count is observed while
-    // the checkpoint runs, so it costs no job of its own.
-    val bounded = grainRows.get("rows").asInstanceOf[Long] <= DimWindowMaxRows
-    // Dims and the consolidated fact materialize too: the warehouse
-    // contract is load-once/query-many, and without them every view or
-    // analytic re-runs 7 dim builds + 7 FK joins + the final grain
-    // consolidation from the grain frame. On a cluster these are the
-    // dim/fact tables a loader would write to storage.
-    val dims = perDim { spec =>
-      val dim = if (bounded) rankedDim(distinctKeys(grain, spec), spec) else buildDim(grain, spec)
-      dim.localCheckpoint()
-    }
-
-    val consolidated = resolveFact(grain, tiempo, dims).localCheckpoint()
-
-    StarSchema(tiempo, dims, consolidated)
+    val dims = MefSchema.dims.map { spec =>
+      spec.name -> none(numbered(distinctKeys(normalized, spec), spec, 0L, dense = false))
+    }.toMap
+    StarSchema(tiempo, dims, none(resolveFact(normalized, tiempo, dims)), dims.map(_._1 -> 0L))
   }
+
+  /** Full star load: the first [[append]], onto [[empty]]. */
+  def build(spark: SparkSession, normalized: DataFrame): StarSchema =
+    append(spark, empty(spark, normalized), normalized)
 
   /** J1 + J4 + P4 + A1: time/FK resolution, completeness filter, grain
     * consolidation of an already-grain-consolidated normalized frame.
@@ -244,76 +226,71 @@ object Star {
       .agg(measureAggs.head, measureAggs.tail: _*)
   }
 
-  /** Incremental load — fold a new normalized batch into an existing
-    * star with the loader's `ON CONFLICT DO NOTHING` key semantics
-    * (`etl/cargar_postgres.py:127-152,236-267`): existing dim rows keep
-    * their surrogate ids and first-loaded attributes; new natural keys
-    * get ids above the current max (the SERIAL analog, J2+J3); fact
-    * grain rows already present are left untouched (first write wins on
-    * the 8-FK UNIQUE, `sql/CreacionDeDataWareHouse.sql:136-137`); new
-    * grains append. Re-delivering an already-loaded batch is a no-op —
-    * the reference's crash-resume contract, engine-native.
+  /** Load one normalized batch into `star`: J2 + J3 dim deltas with
+    * SERIAL-style ids, then the first-write-wins fact merge.
     *
-    * Scale shape: the batch grain-consolidates exactly like [[build]]
-    * (ONE wide shuffle over the BATCH, never the accumulated fact); dim
-    * deltas are anti-joins on bounded dims; the fact merge is a
-    * left-anti join keyed on the 8-FK grain — at 100 TB each step
-    * shuffles at most batch-grain or fact-grain cardinality, not raw
-    * volume. Fresh keys are always numbered by a single-partition
-    * `row_number` window over the batch's new keys; unlike
-    * [[buildDim]], append has no [[graft.operators.DenseId]] route.
+    * Scale shape: the batch grain-consolidates first (ONE wide shuffle
+    * over the BATCH, never the accumulated fact); dim deltas are
+    * anti-joins on bounded dims; the fact merge is a left-anti join
+    * keyed on the 8-FK grain — at 100 TB each step shuffles at most
+    * batch-grain or fact-grain cardinality, not raw volume. The star's
+    * row counts stand in for each dim's max id, so no step aggregates
+    * the existing dims.
     */
-  def append(spark: SparkSession, star: StarSchema, normalizedIn: DataFrame): StarSchema = {
-    val batch = consolidateGrain(normalizedIn)
+  def append(spark: SparkSession, star: StarSchema, normalized: DataFrame): StarSchema = {
+    // The final groupBy(fks) in resolveFact still consolidates any
+    // residual duplicates (e.g. same natural key with inconsistent
+    // attributes), so semantics equal the reference's per-batch A1 +
+    // unique-grain sink.
+    val grainRows = Observation("grain")
+    val batch = consolidateGrain(normalized, grainRows)
+    // A batch brings at most as many new keys as its grain has rows, so
+    // under the window bound no dim needs routed's checkpoint + count
+    // probe. The count is observed while the grain checkpoints, so it
+    // costs no job of its own.
+    val bounded = grainRows.get("rows").asInstanceOf[Long] <= DimWindowMaxRows
 
+    val deltaRows = MefSchema.dims.map(spec => spec.name -> Observation(spec.name)).toMap
     def delta(spec: DimSpec): DataFrame = {
-      val existing = star.dims(spec.name)
       // J3: deterministic representative attributes of the batch's keys.
       val incoming = distinctKeys(batch, spec)
       // J2: new-key detection — null-safe anti-join vs existing keys.
-      val exKeys = existing.select(spec.keys.map(col): _*)
+      val exKeys = star.dims(spec.name).select(spec.keys.map(col): _*)
       val cond = spec.keys.map(k => incoming(k) <=> exKeys(k)).reduce(_ && _)
       val fresh = incoming.join(exKeys, cond, "left_anti")
-      // SERIAL analog: ids continue above the current max, ordered by
-      // natural key within the batch (1-row max cross-joined, J9-style,
-      // so nothing collects to the driver).
-      val maxId = existing.agg(coalesce(max(col(spec.id)), lit(0)).as("_max"))
-      fresh
-        .withColumn("_rn", keyRank(spec))
-        .crossJoin(broadcast(maxId))
-        .select((col("_rn") + col("_max")).cast("int").as(spec.id) +: spec.allCols.map(col): _*)
+      // SERIAL analog: ids continue after the dim's row count.
+      val offset = star.rows(spec.name)
+      val ids =
+        if (bounded) numbered(fresh, spec, offset, dense = false)
+        else routed(fresh, spec, offset, DimWindowMaxRows)
+      ids.observe(deltaRows(spec.name), count(lit(1)).as("rows")).localCheckpoint()
     }
 
-    // Materialize the DELTAS only, lineage-truncated (the warehouse
-    // contract: an append writes the delta partition, it never
-    // rewrites the table — the r11 fold paid an O(accumulated-star)
-    // re-checkpoint of every dim AND the whole fact per load, so k
-    // monthly loads cost O(k²) rewrites). Every dim unconditionally
-    // checkpoints its (possibly empty) delta and unions it on — a
-    // saturated dim still pays one tiny checkpoint job, because the
-    // alternative (an emptiness probe per dim per load) was A/B'd and
-    // costs MORE than the empty unions save: union with an empty
-    // checkpointed delta is free at read time, while a probe costs a
-    // job per dim per load. The union-over-checkpointed-deltas lineage grows one
-    // shallow union node per load over table scans; that stays cheap
-    // to ~dozens of appends, beyond which a consolidation checkpoint
-    // (re-checkpoint the unioned dim, exactly like a cluster
-    // compaction pass) caps it — not wired here because the MEF load
+    // Materialize the DELTAS only, lineage-truncated: an append writes
+    // the delta partition and never rewrites the table (the r11 fold
+    // re-checkpointed every dim and the whole fact per load, O(k²) over
+    // k loads). Every dim checkpoints its (possibly empty) delta and
+    // unions it on: an emptiness probe per dim per load was A/B'd and
+    // costs more than the empty unions save. The delta's row count is
+    // observed on that checkpoint. The lineage grows one shallow union
+    // node per load; past ~dozens of appends a consolidation checkpoint
+    // (a compaction pass) would cap it, not wired because the MEF load
     // cadence is monthly (≤12 appends/year between full rebuilds).
-    val matDims = perDim(spec =>
-      star.dims(spec.name).unionByName(delta(spec).localCheckpoint()))
+    val dims = perDim(spec => star.dims(spec.name).unionByName(delta(spec)))
+    val rows = star.rows.map { case (name, n) =>
+      name -> (n + deltaRows(name).get("rows").asInstanceOf[Long])
+    }
 
     // Resolve the batch against the grown dims, then first-write-wins
     // merge on the 8-FK grain (anti-join is safe on plain equality:
     // FKs are non-null by the P4 filter). Delta-only again: the
     // re-delivery no-op materializes NOTHING.
-    val resolved = resolveFact(batch, star.dimTiempo, matDims)
+    val resolved = resolveFact(batch, star.dimTiempo, dims)
     val freshFact = resolved.join(
       star.fact.select(MefSchema.factFks.map(col): _*),
       MefSchema.factFks.toIndexedSeq, "left_anti")
       .localCheckpoint()
-    val fact = star.fact.unionByName(freshFact)
     // (checkpointed frames free their blocks when the RDDs are GC'd.)
-    StarSchema(star.dimTiempo, matDims, fact)
+    StarSchema(star.dimTiempo, dims, star.fact.unionByName(freshFact), rows)
   }
 }

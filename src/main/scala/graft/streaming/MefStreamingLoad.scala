@@ -35,10 +35,8 @@ final class MefStreamingLoad {
   /** Fold one raw batch (all-string MEF-shaped frame) into the star. */
   def loadBatch(raw: DataFrame): Unit = synchronized {
     val normalized = Normalize(Transform(raw))
-    current = Some(current match {
-      case None => Star.build(raw.sparkSession, normalized)
-      case Some(s) => Star.append(raw.sparkSession, s, normalized)
-    })
+    val loaded = current.getOrElse(Star.empty(raw.sparkSession, normalized))
+    current = Some(Star.append(raw.sparkSession, loaded, normalized))
   }
 
   /** Wire a raw-row stream into the loader. Caller starts/stops the

@@ -184,7 +184,6 @@ class MefPipelineSpec extends SparkSuite {
       .find(_.getAs[String]("ejecutora_codigo") == "E1").get
     assert(e1.getAs[String]("ejecutora_nombre") == "Hospital Central",
       "first-insert attributes win on conflict")
-    Seq(s1, inc, again, s3).foreach(_.release())
   }
 
   test("§2.11: warehouse constraints validate clean on the built star, catch corruption") {
@@ -383,10 +382,8 @@ class MefPipelineSpec extends SparkSuite {
   test("tripwire: Star.build runs no count") {
     val p = writeFixture("2024-Gasto-Mensual.csv", StandardCharsets.UTF_8)
     val normalized = Normalize(MefPipeline.transform(spark, Seq(p.toString)))
-    var built: Star.StarSchema = null
-    val building = actionsOf { built = Star.build(spark, normalized) }
+    val building = actionsOf(Star.build(spark, normalized))
     assert(!building.contains("count"), s"Star.build actions: $building")
-    built.release()
   }
 
   test("empty input: no rows past P3, or an empty CSV, build an empty star that validates") {
@@ -406,7 +403,55 @@ class MefPipelineSpec extends SparkSuite {
       assert(built.fact.count() == 0 && built.dims.values.forall(_.count() == 0), csv)
       assert(validateRows(built) == expectedChecks(), csv)
       assert(Validate.holds(spark, built), csv)
-      built.release()
+    }
+  }
+
+  /** Each dim's recorded row count is its row count and its max id. */
+  private def assertRowsKnown(s: Star.StarSchema, what: String): Unit =
+    MefSchema.dims.foreach { spec =>
+      import org.apache.spark.sql.functions.{col, count, lit, max}
+      val r = s.dims(spec.name).agg(count(lit(1)), max(col(spec.id))).head
+      assert(s.rows(spec.name) == r.getLong(0), s"$what: ${spec.name} rows")
+      assert(s.rows(spec.name) == r.getInt(1), s"$what: ${spec.name} max id")
+    }
+
+  test("the star knows each dim's size: rows == count == max id across loads") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    def batch(rs: Seq[Seq[String]]) = Normalize(MefPipeline.transform(spark, Seq(fixtureOf(rs))))
+    val built = Star.build(spark, batch(rows.take(2)))
+    assertRowsKnown(built, "build")
+    val appended = Star.append(spark, Star.append(spark, built, batch(rows.slice(4, 5))), batch(rows.drop(5)))
+    assertRowsKnown(appended, "two appends")
+    assert(appended.rows("dim_ejecutora") == 2)
+    val redelivered = Star.append(spark, appended, batch(rows.slice(4, 5)))
+    assertRowsKnown(redelivered, "re-delivery")
+    assert(redelivered.rows == appended.rows)
+    // every row fails P3: each delta is empty, and its observation still arrives
+    val noRows = Await.result(Future(Star.append(spark, redelivered, batch(rows.slice(2, 4)))), 5.minutes)
+    assertRowsKnown(noRows, "no valid rows")
+    assert(noRows.rows == appended.rows && noRows.fact.count() == appended.fact.count())
+  }
+
+  test("tripwire: Star.append plans no nested-loop join and no aggregate over the existing dims") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.LogicalRDD
+    val s1 = MefPipeline.buildFromCsv(spark, Seq(fixtureOf(rows.take(4))))
+    val batch2 = Normalize(MefPipeline.transform(spark, Seq(fixtureOf(rows.drop(4)))))
+    val existing = s1.dims.values.flatMap(_.queryExecution.logical.collect { case l: LogicalRDD => l.rdd.id }).toSet
+    val appending = queriesOf(Star.append(spark, s1, batch2))
+    assert(appending.size >= 9, s"grain, 7 deltas and the fact: ${appending.map(_._1)}")
+    appending.foreach { case (name, qe) =>
+      val plan = qe.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoopJoin"), s"$name:\n$plan")
+      val overDims = qe.optimizedPlan.collect {
+        case a: Aggregate if a.collectLeaves().forall {
+          case l: LogicalRDD => existing(l.rdd.id)
+          case _ => false
+        } => a
+      }
+      assert(overDims.isEmpty, s"$name aggregates the existing dims:\n${qe.optimizedPlan}")
     }
   }
 
@@ -440,7 +485,6 @@ class MefPipelineSpec extends SparkSuite {
     def dimKeys(s: Star.StarSchema) = s.dims("dim_ejecutora").collect()
       .map(_.getAs[String]("ejecutora_codigo")).toSet
     assert(dimKeys(chained) == dimKeys(full))
-    full.release(); chained.release()
   }
 
   test("determinism: rebuilding the star yields identical fact + ids (§7.4.1/2)") {
@@ -453,7 +497,6 @@ class MefPipelineSpec extends SparkSuite {
       (fact, ej)
     }
     assert(dump(s1) == dump(s2), "surrogate ids / grain rows must be run-stable")
-    s1.release(); s2.release()
   }
 
   test("multi-year ingest → year-partitioned sink → partition pruning") {

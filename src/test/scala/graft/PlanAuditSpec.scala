@@ -16,10 +16,9 @@ class PlanAuditSpec extends SparkSuite {
   // broadcast probe-set × corpus product that IS the operator.
   private val oneRowCrossJoinOk = Set(
     "share_within_segment", "share_of_total_window", "table_profile",
-    "mef_star_incremental_ytd", "ann_bruteforce_topk", "text_tfidf",
+    "ann_bruteforce_topk", "text_tfidf",
     "ann_pq_fixed_topk", "ann_pq_topk", "ann_pq_rerank_topk", // broadcast probe-table × coded corpus is the ADC operator
     "ann_pq_recall", // embeds the brute-force probe × corpus product — the exact baseline being measured
-    "mef_star_append_fold", // SERIAL-analog max-id as a broadcast 1-row aggregate, ×3 appends
     "negative_sampling", // corpus size N as a broadcast 1-row aggregate
     "customer_deciles",  // ExactNtile: total row count N as a broadcast 1-row aggregate
     "text_collocations", // total token count as a broadcast 1-row aggregate (lift denominator)

@@ -96,12 +96,16 @@ class StarSkewSpec extends SparkSuite {
         .otherwise(format_string("key_%07d", pmod(col("id") * 37, lit(50000))))
         .as("k"),
       concat(lit("n"), pmod(col("id"), lit(7))).as("name"))
-    val windowed = Star.buildDim(big, spec) // default: under the row cap
-    val routed = Star.buildDim(big, spec, windowMaxRows = 100L) // force DenseId
-    assert(routed.schema == windowed.schema, "routed path must keep the int id schema")
-    val a = windowed.collect().toSeq.sortBy(_.getInt(0))
-    val b = routed.collect().toSeq.sortBy(_.getInt(0))
-    assert(a.size == 50000 && a == b, "DenseId route diverged from the ranking window")
+    // a first load, and a load onto a dim that already holds 1,234 rows
+    for (offset <- Seq(0L, 1234L)) {
+      val windowed = Star.buildDim(big, spec, offset = offset) // default: under the row cap
+      val routed = Star.buildDim(big, spec, windowMaxRows = 100L, offset = offset) // force DenseId
+      assert(routed.schema == windowed.schema, "routed path must keep the int id schema")
+      val a = windowed.collect().toSeq.sortBy(_.getInt(0))
+      val b = routed.collect().toSeq.sortBy(_.getInt(0))
+      assert(a.size == 50000 && a == b, s"DenseId route diverged from the ranking window (offset $offset)")
+      assert(a.head.getInt(0) == offset + 1 && a.last.getInt(0) == offset + 50000, s"offset $offset")
+    }
     // and the real MEF dims are identical through the forced route too
     val normalized = Normalize(Transform(
       graft.queries.MefStarQueries.syntheticRaw(spark, dir)))
@@ -156,6 +160,5 @@ class StarSkewSpec extends SparkSuite {
       val w = Star.buildDim(normalized, d).collect().toSeq.sortBy(_.getInt(0))
       assert(b == w && b.nonEmpty, s"dim ${d.name}: Star.build diverged from buildDim")
     }
-    st.release()
   }
 }
