@@ -394,6 +394,29 @@ object Explain {
     shapes.values.toSeq
   }
 
+  /** `text` as PLANS.md prints it: Catalyst's expression ids (`#123`),
+    * exchange plan ids (`plan_id=45`) and RDD ids (`RDD[67]`) renumbered
+    * from 1 in first-seen order, each kind on its own counter; and the
+    * names that differ per JVM masked: the bucketing section's random
+    * temp dir, the pid in `TmpPaths` roots, object identity hashes
+    * (`KmvSketch@6e29ff71`) and lambda class names. Raw ids count up
+    * across a session, so without this a regeneration moves them in
+    * sections whose query did not change.
+    */
+  def stable(text: String): String = {
+    val masked = text
+      .replaceAll("plans_bucketing[0-9]+", "plans_bucketing")
+      .replace(s"_${ProcessHandle.current().pid()}/", "_<pid>/")
+      .replaceAll("\\$\\$Lambda\\$[0-9]+/0x[0-9a-f]+", "\\$\\$Lambda")
+      .replaceAll("(?<=[\\w$])@[0-9a-f]{1,8}\\b", "@<hash>")
+    Seq("#", "plan_id=", "RDD\\[").foldLeft(masked) { (t, prefix) =>
+      val ids = mutable.HashMap.empty[String, Int]
+      s"($prefix)([0-9]+)".r.replaceAllIn(t, m =>
+        java.util.regex.Matcher.quoteReplacement(
+          m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local("8")
     val dir = "/root/testdata/sf0.01"
@@ -401,43 +424,40 @@ object Explain {
     sb.append("# PLANS — formatted physical plans of flagship queries (sf0.01)\n\n")
     sb.append("Generated by `sbt \"runMain graft.Explain\"`. See SCALE.md for the\n")
     sb.append("design rationale each plan is evidence for.\n")
+    // every section goes through here, so its ids count from 1
+    def section(text: String): Unit = { sb.append(stable(text)); () }
     audited.foreach { case (name, note) =>
-      sb.append(s"\n## $name\n\n$note\n\n```\n")
-      sb.append(SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
-        FormattedMode))
-      sb.append("```\n")
+      section(s"\n## $name\n\n$note\n\n```\n" +
+        SparkEntry.queries(name)(spark, dir).queryExecution.explainString(FormattedMode) +
+        "```\n")
     }
     // Iterative/greedy flagships: loops with per-round checkpoints
     // can't be EXPLAIN'd whole (the final frame is lineage-truncated),
     // so each section shows what the query's own actions executed.
     iterative.foreach { case (name, note) =>
       val shapes = capturePlans(spark)(s => SparkEntry.queries(name)(s, dir))
-      sb.append(s"\n## $name (captured)\n\n$note\n\n")
-      sb.append(s"Plans the `SparkEntry` query `$name` executed in a fresh session, " +
+      section(s"\n## $name (captured)\n\n$note\n\n" +
+        s"Plans the `SparkEntry` query `$name` executed in a fresh session, " +
         s"one per distinct shape, in the order first run (${shapes.map(_.runs).sum} actions, " +
-        s"${shapes.size} shapes).\n")
-      shapes.zipWithIndex.foreach { case (p, i) =>
-        sb.append(s"\n### ${i + 1}. ran ${p.runs}× (first as `${p.action}`)\n\n```\n${p.plan}```\n")
-      }
+        s"${shapes.size} shapes).\n" +
+        shapes.zipWithIndex.map { case (p, i) =>
+          s"\n### ${i + 1}. ran ${p.runs}× (first as `${p.action}`)\n\n```\n${p.plan}```\n"
+        }.mkString)
     }
     // Not a SparkEntry query: the optimizer-rule rewrite demo. The
     // user-stated predicate is year(l_shipdate) = 1997 — the plan must
     // show a pushed range on the raw column instead.
-    sb.append("\n## SargableTimeRewrite (optimizer rule)\n\n")
-    sb.append("`WHERE year(l_shipdate) = 1997` as stated by the user; the rule\n")
-    sb.append("rewrites it to a half-open date range so PushedFilters sees it.\n\n```\n")
-    sb.append(Tables.lineitem(spark, dir)
-      .filter(org.apache.spark.sql.functions.expr("year(l_shipdate) = 1997"))
-      .queryExecution.explainString(FormattedMode))
-    sb.append("```\n")
+    section("\n## SargableTimeRewrite (optimizer rule)\n\n" +
+      "`WHERE year(l_shipdate) = 1997` as stated by the user; the rule\n" +
+      "rewrites it to a half-open date range so PushedFilters sees it.\n\n```\n" +
+      Tables.lineitem(spark, dir)
+        .filter(org.apache.spark.sql.functions.expr("year(l_shipdate) = 1997"))
+        .queryExecution.explainString(FormattedMode) +
+      "```\n")
     // Also not a SparkEntry query: the bucketed-table co-located join
     // (write-time layout, so it needs tables written first). The plan
     // must show SortMergeJoin over two bucketed scans with NO Exchange
     // and NO Sort on either side.
-    sb.append("\n## Bucketing (co-located join)\n\n")
-    sb.append("orders and lineitem bucketed 8× on the order key\n")
-    sb.append("(`sources.Bucketing.writeBucketed`): the join plans with no\n")
-    sb.append("exchange and no sort — the write-time layout replaces both.\n\n```\n")
     val bktDir = Files.createTempDirectory("plans_bucketing").toString
     sources.Bucketing.writeBucketed(
       Tables.orders(spark, dir), "plans_bk_orders", s"$bktDir/orders",
@@ -448,61 +468,63 @@ object Explain {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    sb.append(sources.Bucketing.read(spark, "plans_bk_orders")
-      .join(sources.Bucketing.read(spark, "plans_bk_lineitem"),
-        org.apache.spark.sql.functions.col("o_orderkey") ===
-          org.apache.spark.sql.functions.col("l_orderkey"))
-      .queryExecution.explainString(FormattedMode))
-    sb.append("```\n")
+    section("\n## Bucketing (co-located join)\n\n" +
+      "orders and lineitem bucketed 8× on the order key\n" +
+      "(`sources.Bucketing.writeBucketed`): the join plans with no\n" +
+      "exchange and no sort — the write-time layout replaces both.\n\n```\n" +
+      sources.Bucketing.read(spark, "plans_bk_orders")
+        .join(sources.Bucketing.read(spark, "plans_bk_lineitem"),
+          org.apache.spark.sql.functions.col("o_orderkey") ===
+            org.apache.spark.sql.functions.col("l_orderkey"))
+        .queryExecution.explainString(FormattedMode) +
+      "```\n")
     // Skew evidence for the star grain consolidation: one supplier key
     // remapped onto ~half of all rows. The plan's partial HashAggregate
     // BEFORE the exchange is the defense — the hot key compresses
     // inside every map task, so the reducer sees O(tasks) sub-rows per
     // grain, not O(rows). Measured at sf0.1: plain == salted within
     // noise (StarSkewSpec; SCALE.md §Warehouse build).
-    sb.append("\n## Star grain consolidation under a 50% hot key\n\n")
-    sb.append("Supplier 1 carries ~half of the fixture; the partial aggregate\n")
-    sb.append("before the single exchange makes the plain groupBy skew-immune\n")
-    sb.append("for decomposable measures (A/B'd vs SaltedAgg: no crossover).\n\n```\n")
-    sb.append {
-      import org.apache.spark.sql.functions._
-      Tables.lineitem(spark, dir)
-        .withColumn("l_suppkey",
-          when(pmod(col("l_orderkey"), lit(2)) === 0, lit(1).cast("long"))
-            .otherwise(col("l_suppkey")))
-        .groupBy(col("l_suppkey"), month(col("l_shipdate")).as("mes"))
-        .agg(sum(col("l_quantity")).as("q"), count(lit(1)).as("n"))
-        .queryExecution.explainString(FormattedMode)
-    }
-    sb.append("```\n")
+    section("\n## Star grain consolidation under a 50% hot key\n\n" +
+      "Supplier 1 carries ~half of the fixture; the partial aggregate\n" +
+      "before the single exchange makes the plain groupBy skew-immune\n" +
+      "for decomposable measures (A/B'd vs SaltedAgg: no crossover).\n\n```\n" + {
+        import org.apache.spark.sql.functions._
+        Tables.lineitem(spark, dir)
+          .withColumn("l_suppkey",
+            when(pmod(col("l_orderkey"), lit(2)) === 0, lit(1).cast("long"))
+              .otherwise(col("l_suppkey")))
+          .groupBy(col("l_suppkey"), month(col("l_shipdate")).as("mes"))
+          .agg(sum(col("l_quantity")).as("q"), count(lit(1)).as("n"))
+          .queryExecution.explainString(FormattedMode)
+      } +
+      "```\n")
     // AQE skew-join evidence (EXECUTED plan — the split is a runtime
     // re-plan, so the query must run first): the same 50% hot key on
     // a join too big to broadcast. Thresholds are scaled to fixture
     // bytes (production defaults: 256MB/64MB); the mechanism is
     // byte-threshold-relative, identical at 100 TB. AqeSkewJoinSpec
     // asserts this fires; here is the plan it asserts on.
-    sb.append("\n## AQE skew-join split (executed adaptive plan)\n\n")
-    sb.append("Hot key ~90% of the probe side, broadcast disabled, skew\n")
-    sb.append("thresholds at fixture scale: the executed SortMergeJoin shows\n")
-    sb.append("`skew=true` — AQE split the hot partition at runtime.\n\n```\n")
-    sb.append {
-      import org.apache.spark.sql.functions._
-      Seq("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-        .foreach { case (k, v) => spark.conf.set(k, v) }
-      val left = spark.range(200000).select(
-        when(pmod(col("id"), lit(10)) =!= 0, lit(1L)).otherwise(col("id")).as("k"),
-        col("id").as("payload"))
-      val right = spark.range(100000).select(col("id").as("k"), (col("id") * 2).as("r"))
-      val joined = left.join(right, "k")
-      // collect() (not count()) so THIS queryExecution finalizes —
-      // the skew split is a runtime re-plan
-      joined.collect()
-      joined.queryExecution.explainString(FormattedMode)
-    }
-    sb.append("```\n")
+    section("\n## AQE skew-join split (executed adaptive plan)\n\n" +
+      "Hot key ~90% of the probe side, broadcast disabled, skew\n" +
+      "thresholds at fixture scale: the executed SortMergeJoin shows\n" +
+      "`skew=true` — AQE split the hot partition at runtime.\n\n```\n" + {
+        import org.apache.spark.sql.functions._
+        Seq("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
+          .foreach { case (k, v) => spark.conf.set(k, v) }
+        val left = spark.range(200000).select(
+          when(pmod(col("id"), lit(10)) =!= 0, lit(1L)).otherwise(col("id")).as("k"),
+          col("id").as("payload"))
+        val right = spark.range(100000).select(col("id").as("k"), (col("id") * 2).as("r"))
+        val joined = left.join(right, "k")
+        // collect() (not count()) so THIS queryExecution finalizes —
+        // the skew split is a runtime re-plan
+        joined.collect()
+        joined.queryExecution.explainString(FormattedMode)
+      } +
+      "```\n")
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"[explain] wrote PLANS.md (${audited.size + iterative.size + 4} sections)")
     spark.stop()

@@ -42,10 +42,6 @@ object Clean {
     */
   def aNumero(c: Column): Column = c.try_cast("double")
 
-  /** F2 (int flavor): nullable integer parse used for year/month. */
-  def aEntero(c: Column): Column =
-    c.try_cast("double").try_cast("int")
-
   /** F3: (year, month) → first-of-month date; null if either part null. */
   def construirFecha(anio: Column, mes: Column): Column =
     make_date(anio, mes, lit(1))

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Mergeable distinct-count sketches over the md5-lower63 hash stream —
+/* Mergeable distinct-count sketches over the md5-lower63 hash stream —
   * the cardinality companions to [[CountMinSketch]] (frequency). Both
   * are classic mergeable summaries: per-task partial buffers collapse
   * map-side, merge is order-independent, and a per-shard sketch union
@@ -13,7 +13,6 @@ import org.apache.spark.sql.expressions.Aggregator
   * [0, 2⁶³)), so the DuckDB oracle can rebuild every register / kept
   * hash bit-exactly from the same md5 arithmetic.
   */
-object DistinctSketches
 
 /** K-minimum-values (bottom-k) sketch — Bar-Yossef et al. 2002,
   * "Counting distinct elements in a data stream"; also the KMV

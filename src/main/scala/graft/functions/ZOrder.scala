@@ -4,9 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) keys — the multi-dimensional extension of range
-  * clustering ([[graft.sources.ClusteredWrite]] is the 1-D half):
-  * interleaving the bits of two coordinates makes points that are
-  * close in (x, y) close in z, so files range-clustered on z carry
+  * clustering: interleaving the bits of two coordinates makes points
+  * that are close in (x, y) close in z, so files range-clustered on z carry
   * TIGHT min/max footer stats on BOTH columns at once and a predicate
   * on either dimension (or a 2-D box) skips most files — the layout
   * trick behind Delta/Iceberg Z-ORDER, as a plain deterministic

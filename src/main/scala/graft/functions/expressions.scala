@@ -2143,50 +2143,6 @@ case class QuantizeStats(child: Expression)
     copy(child = newChild)
 }
 
-/** Compression-ratio quality signal (the classic "gibberish and
-  * boilerplate both compress abnormally" heuristic — Gopher-family
-  * corpus filters, public literature): deflate the UTF-8 bytes at a
-  * FIXED level and report (raw_bytes, deflate_bytes). Emitting the
-  * two integers rather than a ratio keeps the output exact; callers
-  * divide. Map-only, no allocation beyond the deflater's own buffer.
-  *
-  * NOT oracle-checkable by design: DEFLATE output length is an
-  * implementation detail of the zlib build (level, strategy, library
-  * version), identical across partitions/executors of one JVM fleet
-  * but not across engines — so this kernel stays OUT of the driver
-  * gate's query map; DeflateStatsSpec pins the properties that matter
-  * (repetition compresses, randomness doesn't, determinism within the
-  * fleet).
-  */
-case class DeflateStats(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StructType(Seq(
-    StructField("raw_bytes", IntegerType, nullable = false),
-    StructField("deflate_bytes", IntegerType, nullable = false)))
-  override def prettyName: String = "deflate_stats"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"deflate_stats requires string, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-    d.setInput(bytes)
-    d.finish()
-    val buf = new Array[Byte](8192)
-    var out = 0
-    while (!d.finished()) out += d.deflate(buf)
-    d.end()
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](bytes.length, out))
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): DeflateStats =
-    copy(child = newChild)
-}
-
 /** Aho–Corasick multi-pattern occurrence counter (Aho & Corasick,
   * CACM 1975 — public literature): for each literal pattern, the
   * number of positions of the input where an occurrence ENDS — all
@@ -2479,10 +2435,6 @@ object exprs {
   /** One-pass int8 scalar-quantization profile of a vector column. */
   def quantizeStats(vec: Column): Column =
     GraftShim.column(QuantizeStats(GraftShim.expression(vec)))
-
-  /** (raw_bytes, deflate_bytes) compression-ratio quality signal. */
-  def deflateStats(text: Column): Column =
-    GraftShim.column(DeflateStats(GraftShim.expression(text)))
 
   /** Luhn checksum validity of a digit-string column. */
   def luhnCheck(digits: Column): Column =

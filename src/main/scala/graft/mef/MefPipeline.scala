@@ -13,9 +13,13 @@ import graft.sources.CsvIngest
   */
 object MefPipeline {
 
-  /** CSV paths → conformed+typed frame (Transform stage). */
-  def transform(spark: SparkSession, csvPaths: Seq[String]): DataFrame =
+  /** CSV paths → conformed+typed frame (Transform stage). The list
+    * must be non-empty: an empty frame has no schema to union onto.
+    */
+  def transform(spark: SparkSession, csvPaths: Seq[String]): DataFrame = {
+    require(csvPaths.nonEmpty, "MefPipeline.transform: the CSV path list is empty")
     csvPaths.map(p => Transform(CsvIngest(spark, p))).reduce(_ unionByName _)
+  }
 
   /** Any raw all-string frame → star schema (Transform + Load stages). */
   def buildFromRaw(spark: SparkSession, raw: DataFrame): StarSchema =

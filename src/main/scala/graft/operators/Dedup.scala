@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Deduplication operators for training-data pipelines, each designed
   * around one shuffle-bounded pattern that survives 100 TB inputs:
   *
-  *  - exact / normalized dedup: hash-groupBy on a content digest — one
+  *  - exact dedup: hash-groupBy on a content digest — one
   *    shuffle keyed by digest, no full-text comparisons.
   *  - n-gram Jaccard near-dup: inverted-index self-join on shingles
   *    (never an O(N²) cross join); hot shingles are capped by document
@@ -21,15 +21,6 @@ object Dedup {
   def exactGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.groupBy(md5(col(textCol).cast("binary")).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
-
-  /** Exact dedup after aggressive normalization (lowercase + whitespace
-    * collapse) — catches trivially re-formatted copies.
-    */
-  def normalizedGroups(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val norm = trim(regexp_replace(lower(coalesce(col(textCol), lit(""))), "\\s+", " "))
-    df.groupBy(md5(norm.cast("binary")).as("content_hash"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
-  }
 
   /** Word n-gram shingle set (distinct, first-occurrence order), as an
     * array column — the one-pass [[graft.functions.WordNgrams]] kernel.

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.exprs.{centroidIds, vecDot}
 
-/** Persisted IVF-Flat index — the [[PqStore]] contract for the
-  * uncompressed vector tier: train the coarse quantizer ONCE, assign
-  * every corpus vector to its inverted list ONCE, persist both, then
+/** Persisted IVF-Flat index for the uncompressed vector tier: train
+  * the coarse quantizer ONCE, assign every corpus vector to its
+  * inverted list ONCE, persist both, then
   * serve any number of probe batches from the stored lists without
   * re-training or re-assigning. This closes the load-once/query-many
   * lake story for the vector index that the star schema already has

@@ -30,22 +30,11 @@ import graft.functions.exprs.{centroidIds, vecDot}
   */
 object KnnGraph {
 
-  /** kNN graph with a quantizer trained by the deterministic
-    * exact-integer k-means of [[IvfIndex]] (bit-replayable end to
-    * end). Output: (query_id, neighbor_id, rank, cosine_sim),
-    * rank 1..k per node, ties broken by neighbor id.
+  /** kNN graph against a fixed centroid table, such as one trained by
+    * the deterministic exact-integer k-means of [[IvfIndex]]
+    * (bit-replayable end to end). Output: (query_id, neighbor_id, rank,
+    * cosine_sim), rank 1..k per node, ties broken by neighbor id.
     */
-  def buildIvf(
-      corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-      nlist: Int = 16, nprobe: Int = 8,
-      sampleSize: Int = 10000, iters: Int = 5, seed: Long = 42L): DataFrame = {
-    val cs = IvfIndex
-      .trainCentroids(corpus, idCol, vecCol, nlist, sampleSize, iters, seed)
-      .map(_.toIndexedSeq).toIndexedSeq
-    buildWithCentroids(corpus, idCol, vecCol, k, cs, nprobe)
-  }
-
-  /** kNN graph against a fixed centroid table. */
   def buildWithCentroids(
       corpus: DataFrame, idCol: String, vecCol: String, k: Int,
       cs: Seq[Seq[Double]], nprobe: Int): DataFrame = {

@@ -20,8 +20,7 @@ import org.apache.spark.sql.functions._
   * and [[ImageDecoder]] decodes them with `ImageIO.read`, a pure-JVM
   * codec that ships in every JDK. Features are computed from DECODED
   * PIXELS, never from container bytes, so the oracle twin stays exact
-  * even for PNG, whose deflate stream is zlib-implementation-shaped
-  * (the same reason DeflateStats sits outside the oracle gate).
+  * even for PNG, whose deflate stream is zlib-implementation-shaped.
   * Swapping in heavier codecs (JPEG via the same ImageIO call, video
   * via JavaCV) changes only the kernel body — every schema,
   * partitioning, and batching decision here carries over unchanged.
@@ -137,60 +136,6 @@ object Multimodal {
           val (w, h, mean, feat) = ImageDecoder.decode(m.content)
           MediaFeatures(m.media_id, m.kind, m.content.length, w, h, mean, feat)
         }
-      }
-    }
-  }
-
-  final case class ResizedMedia(
-      media_id: Long, kind: String, width: Int, height: Int, content: Array[Byte])
-
-  /** Real resize: decode → nearest-neighbor downsample to `targetW`
-    * (never upscales) → re-encode as deterministic BMP. Nearest-
-    * neighbor rather than an AWT Graphics scale keeps the resample
-    * arithmetic integer-exact and library-version-independent.
-    */
-  def resize(media: Dataset[MediaRow], targetW: Int, batchSize: Int = 256): Dataset[ResizedMedia] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { m =>
-          val img = ImageIO.read(new ByteArrayInputStream(m.content))
-          require(img != null, "undecodable image payload")
-          val (w0, h0) = (img.getWidth, img.getHeight)
-          val nw = math.max(1, math.min(targetW, w0))
-          val nh = math.max(1, math.round(h0.toDouble * nw / w0).toInt)
-          val raster = img.getRaster
-          val gray = new Array[Byte](nw * nh)
-          var y = 0
-          while (y < nh) {
-            var x = 0
-            while (x < nw) {
-              gray(y * nw + x) =
-                raster.getSample(x * w0 / nw, y * h0 / nh, 0).toByte
-              x += 1
-            }
-            y += 1
-          }
-          ResizedMedia(m.media_id, m.kind, nw, nh, encodeBmp(gray, nw, nh))
-        }
-      }
-    }
-  }
-
-  final case class Frame(media_id: Long, frame_idx: Int, frame: Array[Byte])
-
-  /** Frame sampling for raw "video" payloads (fixed-size uncompressed
-    * frames, the yuv/rgb-raw layout): keep every `everyN`-th frame —
-    * the executor-side explode shape (one row in, many rows out,
-    * payload never on the driver) is the pattern a real container
-    * demuxer would slot into.
-    */
-  def sampleFrames(
-      media: Dataset[MediaRow], frameBytes: Int = 64, everyN: Int = 4): Dataset[Frame] = {
-    import media.sparkSession.implicits._
-    media.flatMap { m =>
-      m.content.grouped(frameBytes).zipWithIndex.collect {
-        case (frame, idx) if idx % everyN == 0 => Frame(m.media_id, idx, frame)
       }
     }
   }

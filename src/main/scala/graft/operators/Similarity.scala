@@ -25,11 +25,6 @@ import org.apache.spark.sql.functions._
 object Similarity {
   import graft.functions.exprs.vecDot
 
-  /** Fixed-order double dot product ([[graft.functions.VecDot]] — a
-    * tight loop, not per-element Catalyst lambdas).
-    */
-  def dot(a: Column, b: Column): Column = vecDot(a, b)
-
   def l2Norm(a: Column): Column = sqrt(vecDot(a, a))
 
   /** Cosine similarity of two float-array columns; 0 for zero vectors. */
@@ -159,19 +154,10 @@ object Similarity {
     * is partial by construction (a neighbor routed to an un-probed
     * list is missed) — `dbscan_ivf_recall` measures it; every emitted
     * pair IS exact-verified, so routed ⊆ exact (precision 1).
-    */
-  def epsNeighborPairsIvf(
-      corpus: DataFrame, idCol: String, vecCol: String, eps: Double,
-      nlist: Int = 16, nprobe: Int = 8,
-      sampleSize: Int = 10000, iters: Int = 5, seed: Long = 42L): DataFrame =
-    epsNeighborPairsIvfWithCentroids(corpus, idCol, vecCol, eps,
-      IvfIndex.trainCentroids(corpus, idCol, vecCol, nlist, sampleSize,
-        iters, seed).map(_.toIndexedSeq).toIndexedSeq,
-      nprobe)
-
-  /** [[epsNeighborPairsIvf]] against a FIXED (pre-trained) quantizer —
-    * the production contract: the index artifact trains once per
-    * corpus version and every consumer routes with it.
+    *
+    * Routes with a FIXED (pre-trained) quantizer `cs` — the production
+    * contract: the index artifact trains once per corpus version and
+    * every consumer routes with it.
     */
   def epsNeighborPairsIvfWithCentroids(
       corpus: DataFrame, idCol: String, vecCol: String, eps: Double,

@@ -1589,7 +1589,7 @@ object GraphLearnQueries {
     // ------------------------------------------------------------------
     // DBSCAN, the PRODUCTION path: the ε-graph comes from the IVF
     // router (one equi-join on the inverted-list id, exact-cosine
-    // verified, symmetrized — Similarity.epsNeighborPairsIvf) instead
+    // verified, symmetrized — Similarity.epsNeighborPairsIvfWithCentroids) instead
     // of the exact O(N²) product; the census chain is IDENTICAL
     // (dbscanCensus). Routed pairs ⊆ exact pairs, so clusters can only
     // split (never merge wrongly) where routing misses a neighbor —

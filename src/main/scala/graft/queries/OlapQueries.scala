@@ -2042,7 +2042,7 @@ object OlapQueries {
 
     // ------------------------------------------------------------------
     // Z-order (Morton) cell statistics — the key behind multi-dim
-    // data-skipping layout (ClusteredWrite.writeZOrdered): interleaving
+    // data-skipping layout: interleaving
     // (customer, order-day) bits makes each coarse z-cell cover a
     // bounded RECTANGLE in both dimensions at once, which is exactly
     // why z-clustered files carry tight footer stats on both columns.

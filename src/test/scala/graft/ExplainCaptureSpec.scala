@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
 import graft.operators.GraphOps
 
-/** PLANS.md's iterative sections come from [[Explain.capturePlans]]:
+/** PLANS.md prints every plan through [[Explain.stable]], and its
+  * iterative sections come from [[Explain.capturePlans]]:
   * the plans a query's actions really executed, grouped by shape. A
   * loop step must show up as one shape run once per round.
   */
@@ -29,5 +31,20 @@ class ExplainCaptureSpec extends SparkSuite {
       expansion.map(_.runs).sum == 3, report)
     // the final noop write ran once, after the loop
     assert(shapes.last.runs == 1, report)
+  }
+
+  test("stable: one query planned twice prints two raw plans and one normalized plan") {
+    def plan() = spark.range(0, 100).select((col("id") % 7).as("k"), col("id"))
+      .groupBy("k").agg(sum("id").as("s"))
+      .queryExecution.explainString(FormattedMode)
+    val (first, second) = (plan(), plan())
+    assert(first != second, "each planning takes fresh expression ids")
+    assert(Explain.stable(first) == Explain.stable(second), Explain.stable(first))
+    assert(Explain.stable("a#17L, b#9, a#17L, [plan_id=40], RDD[8] plans_bucketing123/x") ==
+      "a#1L, b#2, a#1L, [plan_id=1], RDD[1] plans_bucketing/x")
+    val pid = ProcessHandle.current().pid()
+    assert(Explain.stable(s"/tmp/graft_lsh_${pid}/s, KmvSketch@6e29ff71, " +
+      "M$$$Lambda$6219/0x00007f405960e490@4d40c056") ==
+      "/tmp/graft_lsh_<pid>/s, KmvSketch@<hash>, M$$$Lambda@<hash>")
   }
 }

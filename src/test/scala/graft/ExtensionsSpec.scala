@@ -1,8 +1,6 @@
 package graft
 
-import graft.sources.JdbcUpsertSink
-
-/** SQL-surface registration of custom expressions + upsert SQL shape. */
+/** SQL-surface registration of custom expressions. */
 class ExtensionsSpec extends SparkSuite {
 
   test("register alone restores every graft SQL function") {
@@ -52,60 +50,5 @@ class ExtensionsSpec extends SparkSuite {
     assert(spark.sql(
       "SELECT url_canon('HTTP://A.COM:80/x?b=2&utm_s=1&a=1#f') AS u")
       .collect()(0).getString(0) == "http://a.com/x?a=1&b=2")
-  }
-
-  test("upsert statement: reference ON CONFLICT DO NOTHING shape") {
-    val sql = JdbcUpsertSink.upsertStatement(
-      "mef.fact_gasto_mensual",
-      Seq("tiempo_id", "ejecutora_id", "monto_devengado"),
-      Seq("tiempo_id", "ejecutora_id"))
-    assert(sql ==
-      "INSERT INTO mef.fact_gasto_mensual (tiempo_id, ejecutora_id, monto_devengado) " +
-        "VALUES (?, ?, ?) ON CONFLICT (tiempo_id, ejecutora_id) DO NOTHING")
-    assert(!JdbcUpsertSink.upsertStatement("t", Seq("a"), Nil).contains("CONFLICT"))
-  }
-
-  test("S4/S5 smoke: JDBC write + read round-trip through embedded Derby") {
-    import java.sql.DriverManager
-    import org.apache.spark.sql.functions._
-    import graft.sources.JdbcDim
-
-    // In-memory Derby in THIS JVM (local mode shares it with executor
-    // threads) — a real DB the read path can execute against, with no
-    // server and no files. derby.system.home keeps derby.log out of
-    // the repo root.
-    System.setProperty("derby.system.home", "/tmp/derby-home")
-    val url = "jdbc:derby:memory:graftsmoke;create=true"
-    val ddl = DriverManager.getConnection(url)
-    ddl.createStatement().execute(
-      "CREATE TABLE dim_region (r_regionkey INT PRIMARY KEY, r_name VARCHAR(64))")
-    ddl.close()
-
-    // S5 write path: the sink's real foreachPartition/batch/commit
-    // mechanics (conflictKeys empty — the ON CONFLICT clause itself is
-    // Postgres dialect; its DO NOTHING semantics are oracle-tested
-    // engine-natively via Star.append).
-    val region = Tables.region(spark, "/root/testdata/sf0.001")
-      .select(col("r_regionkey").cast("int").as("r_regionkey"), col("r_name"))
-    JdbcUpsertSink.write(
-      region, JdbcUpsertSink.UpsertConfig(url, "dim_region", Nil, batchSize = 2))
-
-    // S4 read path: spark.read.jdbc back into a DataFrame, then use it
-    // the way Star uses dims — broadcast into an FK join.
-    val dim = JdbcDim.read(spark, url, "dim_region")
-    assert(dim.count() == region.count())
-    assert(
-      dim.orderBy("r_regionkey").collect().map(r => (r.getInt(0), r.getString(1))).toSeq ==
-        region.orderBy("r_regionkey").collect().map(r => (r.getInt(0), r.getString(1))).toSeq)
-    val joined = Tables.nation(spark, "/root/testdata/sf0.001")
-      .join(broadcast(dim), col("n_regionkey") === col("r_regionkey"))
-    assert(joined.count() == 25)
-
-    // Partitioned read: 3 range-bounded queries, same rows.
-    val part = JdbcDim.readPartitioned(
-      spark, url, "dim_region", "r_regionkey",
-      lowerBound = 0L, upperBound = 5L, numPartitions = 3)
-    assert(part.rdd.getNumPartitions == 3)
-    assert(part.count() == region.count())
   }
 }

@@ -406,6 +406,14 @@ class MefPipelineSpec extends SparkSuite {
     }
   }
 
+  test("no CSV paths: transform and buildFromCsv fail naming the empty path list") {
+    for (run <- Seq(() => MefPipeline.transform(spark, Nil),
+        () => MefPipeline.buildFromCsv(spark, Nil))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("the CSV path list is empty"), e.getMessage)
+    }
+  }
+
   /** Each dim's recorded row count is its row count and its max id. */
   private def assertRowsKnown(s: Star.StarSchema, what: String): Unit =
     MefSchema.dims.foreach { spec =>

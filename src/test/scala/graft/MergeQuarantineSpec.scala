@@ -2,9 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
-import graft.operators.Quarantine
 import graft.sources.ParquetMerge
 
 class MergeQuarantineSpec extends SparkSuite {
@@ -46,36 +43,5 @@ class MergeQuarantineSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
     assert(got.toSeq == Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0)),
       "pre-crash rows must survive recovery")
-  }
-
-  test("quarantine: one-pass split with per-rule reasons and counts") {
-    val df = Seq(
-      (1, 2020, 6),   // valid
-      (2, 0, 6),      // bad year
-      (3, 2020, 13),  // bad month
-      (4, -1, 0)      // both
-    ).toDF("id", "ano", "mes")
-    val s = Quarantine.split(df, Seq(
-      "year_positive" -> (col("ano") > 0),
-      "month_1_12" -> col("mes").between(1, 12)))
-    assert(s.good.select("id").as[Int].collect().toSeq == Seq(1))
-    val bad = s.bad.select(col("id"), col("failed_rules"))
-      .collect().map(r => r.getInt(0) -> r.getSeq[String](1).toSet).toMap
-    assert(bad == Map(
-      2 -> Set("year_positive"),
-      3 -> Set("month_1_12"),
-      4 -> Set("year_positive", "month_1_12")))
-    val counts = Quarantine.failureCounts(s)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(counts == Map("year_positive" -> 2L, "month_1_12" -> 2L))
-    s.release()
-  }
-
-  test("quarantine: null predicate result routes to bad (not silently good)") {
-    val df = Seq((1, Some(5)), (2, None)).toDF("id", "x")
-    val s = Quarantine.split(df, Seq("x_positive" -> (col("x") > 0)))
-    assert(s.good.select("id").as[Int].collect().toSeq == Seq(1))
-    assert(s.bad.select("id").as[Int].collect().toSeq == Seq(2))
-    s.release()
   }
 }

@@ -69,29 +69,6 @@ class MultimodalSpec extends SparkSuite {
       again.sortBy(_.media_id).map(_.mean_intensity).toSeq)
   }
 
-  test("resize: real decode -> nearest-neighbor -> re-encoded BMP round-trips") {
-    val media = Multimodal.syntheticMedia(spark, dir)
-    val resized = Multimodal.resize(media, targetW = 16).collect()
-    assert(resized.length == 500)
-    resized.foreach { r =>
-      assert(r.width <= 16 && r.width >= 1 && r.height == 1)
-      val (w, h, _, _) = Multimodal.ImageDecoder.decode(r.content)
-      assert((w, h) == (r.width, r.height), "re-encoded dims decode back")
-    }
-  }
-
-  test("sampleFrames: raw-frame explode shape, executor-side") {
-    import spark.implicits._
-    val raw = Seq(
-      MediaRow(1L, "video/raw", Array.tabulate(200)(_.toByte), "synth", 200L),
-      MediaRow(2L, "video/raw", Array.tabulate(31)(_.toByte), "synth", 31L)).toDS()
-    val frames = Multimodal.sampleFrames(raw, frameBytes = 32, everyN = 4).collect()
-    // id 1: ceil(200/32)=7 frames, keep idx 0 and 4 -> 2; id 2: 1 frame, idx 0
-    assert(frames.count(_.media_id == 1L) == 2)
-    assert(frames.count(_.media_id == 2L) == 1)
-    assert(frames.filter(_.media_id == 2L).head.frame.length == 31)
-  }
-
   test("featureFrame: compact output, no binary column leaves the plan") {
     val df = Multimodal.featureFrame(spark, dir)
     assert(!df.schema.fields.exists(_.dataType.typeName == "binary"))
