@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.{ExplainUtils, FormattedMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-audit utility: dumps formatted physical plans of flagship
@@ -336,7 +337,7 @@ object Explain {
 
   /** Iterative/greedy flagships whose loops checkpoint per round, so
     * the final frame's plan is lineage-truncated: each section shows
-    * the plans the query's actions executed ([[capturePlans]]). The
+    * the initial plans of the query's actions ([[capturePlans]]). The
     * note carries the loop invariant.
     */
   private val iterative = Seq(
@@ -359,19 +360,21 @@ object Explain {
     "greedy_matching_trade" ->
       "One matching round on the checkpointed live-edge frame: per-node min priority key is ONE union + ONE agg (the linear formulation — the per-edge NOT-EXISTS neighbor scan is quadratic), winners are two equi-joins back on u and v. Loop invariant: the globally minimal live edge always wins, so every round makes progress; live re-derives from the shrinking active set per round and checkpoints (it feeds the probe, the agg, and the winner join).")
 
-  /** One distinct executed plan shape: how many actions ran it, the
-    * first such action's name, and that action's formatted plan.
+  /** One distinct plan shape: how many actions ran it, the first such
+    * action's name, and that action's formatted initial plan.
     */
   final case class PlanShape(runs: Int, action: String, plan: String)
 
   /** Runs `body` in a fresh session of `spark`, noop-writes its frame,
-    * and returns every plan the session's actions executed, one
+    * and returns the plan of every action the session ran, one
     * [[PlanShape]] per shape in the order it first ran. A shape is the
     * formatted plan with every digit run masked (expression and RDD
     * ids, per-round literals), so a loop body shows up as one shape
-    * run once per round. A fresh session also rebuilds the session
-    * artifacts the body reads, so loops inside artifact builds run
-    * here too.
+    * run once per round. An adaptive plan is recorded as AQE first
+    * planned it ([[initialPlan]]): the final plan depends on which
+    * query stage finished first, so it differs between runs. A fresh
+    * session also rebuilds the session artifacts the body reads, so
+    * loops inside artifact builds run here too.
     */
   def capturePlans(spark: SparkSession)(body: SparkSession => DataFrame): Seq[PlanShape] = {
     val s = spark.newSession()
@@ -387,11 +390,23 @@ object Explain {
     ListenerBusDrain.drain(s.sparkContext)
     val shapes = mutable.LinkedHashMap.empty[String, PlanShape]
     runs.asScala.foreach { case (action, qe) =>
-      val plan = qe.explainString(FormattedMode)
+      val plan = initialPlan(qe)
       val key = plan.replaceAll("[0-9]+", "#")
       shapes(key) = shapes.get(key).fold(PlanShape(1, action, plan))(p => p.copy(runs = p.runs + 1))
     }
     shapes.values.toSeq
+  }
+
+  /** `qe`'s formatted physical plan before it ran. An adaptive plan
+    * prints as an unexecuted adaptive node over its
+    * `AdaptiveSparkPlanExec.initialPlan` (`isFinalPlan=false`).
+    */
+  private def initialPlan(qe: QueryExecution): String = qe.executedPlan match {
+    case a: AdaptiveSparkPlanExec =>
+      val sb = new StringBuilder("== Physical Plan ==\n")
+      ExplainUtils.processPlan[SparkPlan](a.copy(inputPlan = a.initialPlan), s => { sb.append(s); () })
+      sb.toString
+    case _ => qe.explainString(FormattedMode)
   }
 
   /** `text` as PLANS.md prints it: Catalyst's expression ids (`#123`),
@@ -399,9 +414,12 @@ object Explain {
     * from 1 in first-seen order, each kind on its own counter; and the
     * names that differ per JVM masked: the bucketing section's random
     * temp dir, the pid in `TmpPaths` roots, object identity hashes
-    * (`KmvSketch@6e29ff71`) and lambda class names. Raw ids count up
-    * across a session, so without this a regeneration moves them in
-    * sections whose query did not change.
+    * (`KmvSketch@6e29ff71`) and lambda class names; and the source
+    * line of RDD call sites (`localCheckpoint at KnnGraph.scala:45`
+    * prints as `localCheckpoint at KnnGraph.scala`). Raw ids count up
+    * across a session, and call-site lines move with any edit above
+    * them, so without this a regeneration moves sections whose query
+    * did not change.
     */
   def stable(text: String): String = {
     val masked = text
@@ -409,6 +427,7 @@ object Explain {
       .replace(s"_${ProcessHandle.current().pid()}/", "_<pid>/")
       .replaceAll("\\$\\$Lambda\\$[0-9]+/0x[0-9a-f]+", "\\$\\$Lambda")
       .replaceAll("(?<=[\\w$])@[0-9a-f]{1,8}\\b", "@<hash>")
+      .replaceAll("(?<=\\.scala):[0-9]+", "")
     Seq("#", "plan_id=", "RDD\\[").foldLeft(masked) { (t, prefix) =>
       val ids = mutable.HashMap.empty[String, Int]
       s"($prefix)([0-9]+)".r.replaceAllIn(t, m =>
@@ -433,12 +452,12 @@ object Explain {
     }
     // Iterative/greedy flagships: loops with per-round checkpoints
     // can't be EXPLAIN'd whole (the final frame is lineage-truncated),
-    // so each section shows what the query's own actions executed.
+    // so each section shows the plans of the query's own actions.
     iterative.foreach { case (name, note) =>
       val shapes = capturePlans(spark)(s => SparkEntry.queries(name)(s, dir))
       section(s"\n## $name (captured)\n\n$note\n\n" +
-        s"Plans the `SparkEntry` query `$name` executed in a fresh session, " +
-        s"one per distinct shape, in the order first run (${shapes.map(_.runs).sum} actions, " +
+        s"Initial plans of the actions the `SparkEntry` query `$name` ran in a fresh " +
+        s"session, one per distinct shape, in the order first run (${shapes.map(_.runs).sum} actions, " +
         s"${shapes.size} shapes).\n" +
         shapes.zipWithIndex.map { case (p, i) =>
           s"\n### ${i + 1}. ran ${p.runs}× (first as `${p.action}`)\n\n```\n${p.plan}```\n"

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.exprs.vecDot
+import graft.functions.exprs.centroidIds
 
 /** IVF (inverted-file) approximate nearest neighbor — the second scale
   * path next to hyperplane LSH ([[Similarity.lshTopK]]), following the
@@ -181,24 +181,27 @@ object IvfIndex {
   def searchWithCentroids(
       corpus: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
       k: Int, cs: Seq[Seq[Double]], nprobe: Int): DataFrame = {
-    import graft.functions.exprs.centroidIds
-    val indexed = corpus.select(
-      col(idCol).as("neighbor_id"), col(vecCol).as("vec_n"),
-      Similarity.l2Norm(col(vecCol)).as("norm_n"),
+    val indexed = Similarity.side(
+      corpus, idCol, vecCol, Similarity.l2Norm(col(vecCol)), "neighbor_id", "n",
       element_at(centroidIds(col(vecCol), cs, 1), 1).as("list_id"))
-    val fanned = probes.select(
-      col(idCol).as("query_id"), col(vecCol).as("vec_q"),
-      Similarity.l2Norm(col(vecCol)).as("norm_q"),
+    searchLists(indexed, probes, idCol, vecCol, k, cs, nprobe)
+  }
+
+  /** The search half of [[searchWithCentroids]] over already-assigned
+    * inverted lists `indexed` (neighbor_id, vec_n, norm_n, list_id):
+    * probes fan out to their `nprobe` nearest lists, one equi-join on
+    * `list_id`, cosine rerank, per-query top-k. [[IvfStore.probe]]
+    * serves its stored lists through it.
+    */
+  private[operators] def searchLists(
+      indexed: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
+      k: Int, cs: Seq[Seq[Double]], nprobe: Int): DataFrame = {
+    val fanned = Similarity.side(
+      probes, idCol, vecCol, Similarity.l2Norm(col(vecCol)), "query_id", "q",
       explode(centroidIds(col(vecCol), cs, nprobe)).as("list_id"))
     val pairs = indexed.join(fanned, Seq("list_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine_sim",
-        when(col("norm_n") * col("norm_q") > 0,
-          vecDot(col("vec_n"), col("vec_q")) / (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)))
-    graft.plans.TopKPerGroup(
-      pairs, Seq("query_id"), Seq(("cosine_sim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_sim"))
+      .withColumn("cosine_sim", Similarity.sideCosine("n", "q"))
+    Similarity.topKPerQuery(pairs, ("cosine_sim", true), k, "cosine_sim")
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.exprs.{centroidIds, vecDot}
+import graft.functions.exprs.centroidIds
 
 /** Persisted IVF-Flat index for the uncompressed vector tier: train
   * the coarse quantizer ONCE, assign every corpus vector to its
@@ -143,19 +143,6 @@ object IvfStore {
     val indexed = liveLists(spark, path)
       .select(col("vec_id").as("neighbor_id"), col("list_id"),
         col("embedding").as("vec_n"), col("norm_n"))
-    val fanned = probes.select(
-      col(idCol).as("query_id"), col(vecCol).as("vec_q"),
-      Similarity.l2Norm(col(vecCol)).as("norm_q"),
-      explode(centroidIds(col(vecCol), cs, nprobe)).as("list_id"))
-    val pairs = indexed.join(fanned, Seq("list_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine_sim",
-        when(col("norm_n") * col("norm_q") > 0,
-          vecDot(col("vec_n"), col("vec_q")) / (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)))
-    graft.plans.TopKPerGroup(
-      pairs, Seq("query_id"), Seq(("cosine_sim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_sim"))
+    IvfIndex.searchLists(indexed, probes, idCol, vecCol, k, cs, nprobe)
   }
 }

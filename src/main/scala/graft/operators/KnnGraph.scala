@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.exprs.{centroidIds, vecDot}
+import graft.functions.exprs.centroidIds
 
 /** Corpus-wide k-nearest-neighbor GRAPH construction: every node is
   * both probe and candidate — the backbone structure SemDeDup-style
@@ -53,19 +53,7 @@ object KnnGraph {
     val cand = idx.join(probe, Seq("list_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"))
-    val pairs = cand
-      .join(base.select(col("id").as("neighbor_id"), col("vec").as("vec_n"),
-        col("norm").as("norm_n")), "neighbor_id")
-      .join(base.select(col("id").as("query_id"), col("vec").as("vec_q"),
-        col("norm").as("norm_q")), "query_id")
-      .withColumn("cosine_sim",
-        when(col("norm_n") * col("norm_q") > 0,
-          vecDot(col("vec_n"), col("vec_q")) / (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)))
-    graft.plans.TopKPerGroup(
-      pairs, Seq("query_id"), Seq(("cosine_sim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_sim"))
+    Similarity.topKPerQuery(rescore(cand, base), ("cosine_sim", true), k, "cosine_sim")
   }
 
   /** SKEW-ROBUST graph build: [[buildWithCentroids]] with a LIST-SIZE
@@ -114,19 +102,7 @@ object KnnGraph {
     val cand = idx.join(probe, Seq("list_id", "shard"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"))
-    val pairs = cand
-      .join(base.select(col("id").as("neighbor_id"), col("vec").as("vec_n"),
-        col("norm").as("norm_n")), "neighbor_id")
-      .join(base.select(col("id").as("query_id"), col("vec").as("vec_q"),
-        col("norm").as("norm_q")), "query_id")
-      .withColumn("cosine_sim",
-        when(col("norm_n") * col("norm_q") > 0,
-          vecDot(col("vec_n"), col("vec_q")) / (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)))
-    graft.plans.TopKPerGroup(
-      pairs, Seq("query_id"), Seq(("cosine_sim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_sim"))
+    Similarity.topKPerQuery(rescore(cand, base), ("cosine_sim", true), k, "cosine_sim")
   }
 
   /** INCREMENTAL graph maintenance against a FIXED quantizer: `base`
@@ -167,21 +143,14 @@ object KnnGraph {
       .select(col("query_id"), col("neighbor_id"))
     val all = b.unionByName(f)
     val scored = cand
-      .join(all.select(col("id").as("neighbor_id"), col("vec").as("vec_n"),
-        col("norm").as("norm_n")), "neighbor_id")
-      .join(all.select(col("id").as("query_id"), col("vec").as("vec_q"),
-        col("norm").as("norm_q")), "query_id")
+      .join(reattach(all, "neighbor_id", "n"), "neighbor_id")
+      .join(reattach(all, "query_id", "q"), "query_id")
       .select(col("query_id"), col("neighbor_id"),
-        when(col("norm_n") * col("norm_q") > 0,
-          vecDot(col("vec_n"), col("vec_q")) / (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)).as("cosine_sim"))
+        Similarity.sideCosine("n", "q").as("cosine_sim"))
     val merged = baseKnn
       .select(col("query_id"), col("neighbor_id"), col("cosine_sim"))
       .unionByName(scored)
-    graft.plans.TopKPerGroup(
-      merged, Seq("query_id"), Seq(("cosine_sim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_sim"))
+    Similarity.topKPerQuery(merged, ("cosine_sim", true), k, "cosine_sim")
   }
 
   /** Memory-bounded graph construction — the IVFADC composition
@@ -223,19 +192,7 @@ object KnnGraph {
         .withColumn("adc_dist", adcDistance(col("codes"), col("tbl"), ksub)),
       Seq("query_id"), Seq(("adc_dist", false), ("neighbor_id", false)), shortK)
       .select(col("query_id"), col("neighbor_id"))
-    val rescored = shortlist
-      .join(base.select(col("id").as("neighbor_id"), col("vec").as("vec_n"),
-        col("norm").as("norm_n")), "neighbor_id")
-      .join(base.select(col("id").as("query_id"), col("vec").as("vec_q"),
-        col("norm").as("norm_q")), "query_id")
-      .withColumn("cosine_sim",
-        when(col("norm_n") * col("norm_q") > 0,
-          vecDot(col("vec_n"), col("vec_q")) / (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)))
-    graft.plans.TopKPerGroup(
-      rescored, Seq("query_id"), Seq(("cosine_sim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"))
+    Similarity.topKPerQuery(rescore(shortlist, base), ("cosine_sim", true), k)
   }
 
   /** ONE NN-descent round (Dong, Moses & Li, WWW 2011: "a neighbor of
@@ -261,20 +218,21 @@ object KnnGraph {
     val side = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
         Similarity.l2Norm(col(vecCol)).as("norm"))
       .localCheckpoint()
-    val pairs = cand
-      .join(side.select(col("id").as("neighbor_id"), col("vec").as("vec_n"),
-        col("norm").as("norm_n")), "neighbor_id")
-      .join(side.select(col("id").as("query_id"), col("vec").as("vec_q"),
-        col("norm").as("norm_q")), "query_id")
-      .withColumn("cosine_sim",
-        when(col("norm_n") * col("norm_q") > 0,
-          vecDot(col("vec_n"), col("vec_q")) / (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)))
-    graft.plans.TopKPerGroup(
-      pairs, Seq("query_id"), Seq(("cosine_sim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_sim"))
+    Similarity.topKPerQuery(rescore(cand, side), ("cosine_sim", true), k, "cosine_sim")
   }
+
+  /** `base`'s (id, vec, norm) as one side of the rerank join. */
+  private def reattach(base: DataFrame, idAs: String, s: String): DataFrame =
+    Similarity.side(base, "id", "vec", col("norm"), idAs, s)
+
+  /** `cand`'s (query_id, neighbor_id) pairs with both vectors re-attached
+    * by id from `base` and scored as `cosine_sim`.
+    */
+  private def rescore(cand: DataFrame, base: DataFrame): DataFrame =
+    cand
+      .join(reattach(base, "neighbor_id", "n"), "neighbor_id")
+      .join(reattach(base, "query_id", "q"), "query_id")
+      .withColumn("cosine_sim", Similarity.sideCosine("n", "q"))
 
   /** Mutual-kNN edges of a built graph: (a, b) survives iff a→b AND
     * b→a are both kNN edges — the standard sparsification before

@@ -43,10 +43,7 @@ object MaxSim {
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("maxsim",
         graft.functions.exprs.maxSimScore(col("vec_q"), col("vec_n"), slices))
-    graft.plans.TopKPerGroup(
-      pairs, Seq("query_id"), Seq(("maxsim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("maxsim"))
+    Similarity.topKPerQuery(pairs, ("maxsim", true), k, "maxsim")
   }
 
   /** IVF-routed MaxSim: the corpus-scale pruning path. Corpus rows
@@ -74,9 +71,6 @@ object MaxSim {
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("maxsim",
         graft.functions.exprs.maxSimScore(col("vec_q"), col("vec_n"), slices))
-    graft.plans.TopKPerGroup(
-      pairs, Seq("query_id"), Seq(("maxsim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("maxsim"))
+    Similarity.topKPerQuery(pairs, ("maxsim", true), k, "maxsim")
   }
 }

@@ -82,10 +82,7 @@ object PqIndex {
     val pairs = coded.crossJoin(broadcast(tabled))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("adc_dist", adcDistance(col("codes"), col("tbl"), ksub))
-    graft.plans.TopKPerGroup(
-      pairs, Seq("query_id"), Seq(("adc_dist", false), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("adc_dist"))
+    Similarity.topKPerQuery(pairs, ("adc_dist", false), k, "adc_dist")
   }
 
   /** IVF-routed PQ search — the IVFPQ composition (Jégou et al.'s
@@ -117,43 +114,30 @@ object PqIndex {
     val pairs = coded.join(broadcast(probed), Seq("list_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("adc_dist", adcDistance(col("codes"), col("tbl"), ksub))
-    graft.plans.TopKPerGroup(
-      pairs, Seq("query_id"), Seq(("adc_dist", false), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("adc_dist"))
+    Similarity.topKPerQuery(pairs, ("adc_dist", false), k, "adc_dist")
   }
 
   /** Two-stage search — the standard production composition: the
     * corpus-wide pass is compressed-domain ADC (codes only) down to a
     * `shortK` shortlist, then full vectors re-attach for ONLY
     * shortlist rows (≤ probes × shortK — the skinny-shuffle rule) and
-    * an exact cosine rerank picks the final k. Cosine rides the same
-    * VecDot/left-fold arithmetic the IVF/LSH oracles replay
-    * bit-exactly.
+    * an exact cosine rerank ([[Similarity.cosineFromNorms]], the rule
+    * the IVF/LSH oracles replay bit-exactly) picks the final k.
     */
   def rerankTopK(
       corpus: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
       k: Int, shortK: Int, codebooks: Seq[Seq[Seq[Long]]]): DataFrame = {
-    import graft.functions.exprs.vecDot
     val shortlist = topK(corpus, probes, idCol, vecCol, shortK, codebooks)
       .select(col("query_id"), col("neighbor_id"))
-    val nSide = corpus.select(
-      col(idCol).as("neighbor_id"), col(vecCol).as("vec_n"),
-      Similarity.l2Norm(col(vecCol)).as("norm_n"))
-    val qSide = probes.select(
-      col(idCol).as("query_id"), col(vecCol).as("vec_q"),
-      Similarity.l2Norm(col(vecCol)).as("norm_q"))
+    val nSide = Similarity.side(
+      corpus, idCol, vecCol, Similarity.l2Norm(col(vecCol)), "neighbor_id", "n")
+    val qSide = Similarity.side(
+      probes, idCol, vecCol, Similarity.l2Norm(col(vecCol)), "query_id", "q")
     val rescored = shortlist
       .join(nSide, Seq("neighbor_id"))
       .join(broadcast(qSide), Seq("query_id"))
-      .withColumn("cosine_sim",
-        when(col("norm_n") * col("norm_q") > 0,
-          vecDot(col("vec_n"), col("vec_q")) / (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)))
-    graft.plans.TopKPerGroup(
-      rescored, Seq("query_id"), Seq(("cosine_sim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"))
+      .withColumn("cosine_sim", Similarity.sideCosine("n", "q"))
+    Similarity.topKPerQuery(rescored, ("cosine_sim", true), k)
   }
 
   /** Seeded RESIDUAL-scale codebook for RQ level 2: Gaussian·256
@@ -194,9 +178,6 @@ object PqIndex {
       .withColumn("adc_dist", adcDistance(
         array(element_at(col("codes"), 1) * n2 + element_at(col("codes"), 2)),
         col("tbl"), cb1.length * n2))
-    graft.plans.TopKPerGroup(
-      pairs, Seq("query_id"), Seq(("adc_dist", false), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("adc_dist"))
+    Similarity.topKPerQuery(pairs, ("adc_dist", false), k, "adc_dist")
   }
 }

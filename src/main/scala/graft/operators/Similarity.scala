@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Similarity search over an embedding column (array<float>).
   *
   * - [[bruteForceTopK]] — exact cosine top-k: broadcast the (small) probe
-  *   set against the corpus, one scan, per-query top-k via ranking
-  *   window on the query key. O(corpus × probes) work but a single
+  *   set against the corpus, one scan, per-query top-k through
+  *   [[topKPerQuery]]. O(corpus × probes) work but a single
   *   pass — the correctness baseline and the right tool when the probe
   *   set is small.
   * - [[lshTopK]] — the scale path: random-hyperplane LSH (Charikar 2002)
@@ -27,11 +27,41 @@ object Similarity {
 
   def l2Norm(a: Column): Column = sqrt(vecDot(a, a))
 
+  /** Cosine of two float-array columns from their precomputed L2 norms;
+    * 0 when either norm is 0. The one scoring rule of every exact
+    * rerank.
+    */
+  def cosineFromNorms(a: Column, b: Column, normA: Column, normB: Column): Column =
+    when(normA * normB > 0, vecDot(a, b) / (normA * normB)).otherwise(lit(0.0))
+
   /** Cosine similarity of two float-array columns; 0 for zero vectors. */
-  def cosine(a: Column, b: Column): Column = {
-    val denom = l2Norm(a) * l2Norm(b)
-    when(denom > 0, vecDot(a, b) / denom).otherwise(lit(0.0))
-  }
+  def cosine(a: Column, b: Column): Column = cosineFromNorms(a, b, l2Norm(a), l2Norm(b))
+
+  /** [[cosineFromNorms]] of the two [[side]]s of a rerank join,
+    * `vec_<a>`/`norm_<a>` against `vec_<b>`/`norm_<b>`.
+    */
+  def sideCosine(a: String, b: String): Column =
+    cosineFromNorms(col(s"vec_$a"), col(s"vec_$b"), col(s"norm_$a"), col(s"norm_$b"))
+
+  /** `df` as one side of a rerank join: column `id` as `idAs`, `vec` and
+    * `norm` as `vec_<s>` and `norm_<s>`, then `extra` (a routing key).
+    */
+  def side(
+      df: DataFrame, id: String, vec: String, norm: Column,
+      idAs: String, s: String, extra: Column*): DataFrame =
+    df.select(Seq(col(id).as(idAs), col(vec).as(s"vec_$s"), norm.as(s"norm_$s")) ++ extra: _*)
+
+  /** The per-query tail of every search: native bounded-heap top-k
+    * ([[graft.plans.TopKPerGroup]]: no per-group sort, map-side
+    * partials shrink the exchange to ≤ k rows per (partition, query))
+    * by `query_id` over `score`, TopKPerGroup's (column, descending)
+    * order spec, ties to the lower `neighbor_id`; output (query_id,
+    * neighbor_id, rank, `keep`...), rank 1..k.
+    */
+  def topKPerQuery(pairs: DataFrame, score: (String, Boolean), k: Int, keep: String*): DataFrame =
+    graft.plans.TopKPerGroup(pairs, Seq("query_id"), Seq(score, ("neighbor_id", false)), k)
+      .withColumnRenamed("topk_rank", "rank")
+      .select((Seq("query_id", "neighbor_id", "rank") ++ keep).map(col): _*)
 
   /** Exact top-k neighbors for each probe vector.
     * Output: (query_id, neighbor_id, rank, cosine_sim), rank 1..k,
@@ -41,23 +71,12 @@ object Similarity {
       corpus: DataFrame, probes: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
     // norms once per side (not once per pair)
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec_n"),
-      l2Norm(col(vecCol)).as("norm_n"))
-    val p = probes.select(col(idCol).as("query_id"), col(vecCol).as("vec_q"),
-      l2Norm(col(vecCol)).as("norm_q"))
+    val c = side(corpus, idCol, vecCol, l2Norm(col(vecCol)), "neighbor_id", "n")
+    val p = side(probes, idCol, vecCol, l2Norm(col(vecCol)), "query_id", "q")
     val pairs = c.crossJoin(broadcast(p))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine_sim",
-        when(col("norm_n") * col("norm_q") > 0,
-          vecDot(col("vec_n"), col("vec_q")) / (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)))
-    // native bounded-heap top-k (graft.plans.TopKPerGroup) — no
-    // per-group sort, map-side partials shrink the exchange to ≤k
-    // rows per (partition, query)
-    graft.plans.TopKPerGroup(
-      pairs, Seq("query_id"), Seq(("cosine_sim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_sim"))
+      .withColumn("cosine_sim", sideCosine("n", "q"))
+    topKPerQuery(pairs, ("cosine_sim", true), k, "cosine_sim")
   }
 
   /** Exact cosine top-k when the probe side is TOO BIG to broadcast
@@ -84,24 +103,16 @@ object Similarity {
       spark.range(corpusBlocks).select(col("id").cast("int").as("blk_c")))
     val pBlk = broadcast(
       spark.range(probeBlocks).select(col("id").cast("int").as("blk_p")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec_n"),
-        l2Norm(col(vecCol)).as("norm_n"),
+    val c = side(corpus, idCol, vecCol, l2Norm(col(vecCol)), "neighbor_id", "n",
         pmod(hash(col(idCol)), lit(corpusBlocks)).as("blk_c"))
       .crossJoin(pBlk)
-    val p = probes.select(col(idCol).as("query_id"), col(vecCol).as("vec_q"),
-        l2Norm(col(vecCol)).as("norm_q"),
+    val p = side(probes, idCol, vecCol, l2Norm(col(vecCol)), "query_id", "q",
         pmod(hash(col(idCol)), lit(probeBlocks)).as("blk_p"))
       .crossJoin(cBlk)
     val pairs = c.join(p, Seq("blk_c", "blk_p"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine_sim",
-        when(col("norm_n") * col("norm_q") > 0,
-          vecDot(col("vec_n"), col("vec_q")) / (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)))
-    graft.plans.TopKPerGroup(
-      pairs, Seq("query_id"), Seq(("cosine_sim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_sim"))
+      .withColumn("cosine_sim", sideCosine("n", "q"))
+    topKPerQuery(pairs, ("cosine_sim", true), k, "cosine_sim")
   }
 
   /** ALL directed pairs with cosine ≥ eps — the ε-neighborhood graph
@@ -121,20 +132,15 @@ object Similarity {
       spark.range(corpusBlocks).select(col("id").cast("int").as("blk_c")))
     val pBlk = broadcast(
       spark.range(probeBlocks).select(col("id").cast("int").as("blk_p")))
-    val c = corpus.select(col(idCol).as("j"), col(vecCol).as("vec_n"),
-        l2Norm(col(vecCol)).as("norm_n"),
+    val c = side(corpus, idCol, vecCol, l2Norm(col(vecCol)), "j", "n",
         pmod(hash(col(idCol)), lit(corpusBlocks)).as("blk_c"))
       .crossJoin(pBlk)
-    val p = corpus.select(col(idCol).as("i"), col(vecCol).as("vec_q"),
-        l2Norm(col(vecCol)).as("norm_q"),
+    val p = side(corpus, idCol, vecCol, l2Norm(col(vecCol)), "i", "q",
         pmod(hash(col(idCol)), lit(probeBlocks)).as("blk_p"))
       .crossJoin(cBlk)
     c.join(p, Seq("blk_c", "blk_p"))
       .filter(col("i") =!= col("j"))
-      .withColumn("sim",
-        when(col("norm_n") * col("norm_q") > 0,
-          vecDot(col("vec_n"), col("vec_q")) / (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)))
+      .withColumn("sim", sideCosine("n", "q"))
       .filter(col("sim") >= eps)
       .select(col("i"), col("j"), col("sim"))
   }
@@ -176,14 +182,9 @@ object Similarity {
       .filter(col("i") =!= col("j"))
       .select(col("i"), col("j"))
     val dirPairs = cand
-      .join(base.select(col("id").as("j"), col("vec").as("vec_n"),
-        col("norm").as("norm_n")), "j")
-      .join(base.select(col("id").as("i"), col("vec").as("vec_q"),
-        col("norm").as("norm_q")), "i")
-      .withColumn("sim",
-        when(col("norm_n") * col("norm_q") > 0,
-          vecDot(col("vec_n"), col("vec_q")) / (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)))
+      .join(side(base, "id", "vec", col("norm"), "j", "n"), "j")
+      .join(side(base, "id", "vec", col("norm"), "i", "q"), "i")
+      .withColumn("sim", sideCosine("n", "q"))
       .filter(col("sim") >= eps)
       .select(col("i"), col("j"))
     dirPairs
@@ -227,21 +228,13 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
-    val cSide = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec_n"),
-      l2Norm(col(vecCol)).as("norm_n"))
-    val pSide = probes.select(col(idCol).as("query_id"), col(vecCol).as("vec_q"),
-      l2Norm(col(vecCol)).as("norm_q"))
     val pairs = candidates
-      .join(cSide, "neighbor_id")
-      .join(broadcast(pSide), "query_id")
-      .withColumn("cosine_sim",
-        when(col("norm_n") * col("norm_q") > 0,
-          vecDot(col("vec_n"), col("vec_q")) / (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)))
-    graft.plans.TopKPerGroup(
-      pairs, Seq("query_id"), Seq(("cosine_sim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_sim"))
+      .join(side(corpus, idCol, vecCol, l2Norm(col(vecCol)), "neighbor_id", "n"),
+        "neighbor_id")
+      .join(broadcast(side(probes, idCol, vecCol, l2Norm(col(vecCol)), "query_id", "q")),
+        "query_id")
+      .withColumn("cosine_sim", sideCosine("n", "q"))
+    topKPerQuery(pairs, ("cosine_sim", true), k, "cosine_sim")
   }
 
   /** Multi-probe LSH top-k (Lv, Josephson, Wang, Charikar & Li, VLDB
@@ -278,21 +271,13 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
-    val cSide = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec_n"),
-      l2Norm(col(vecCol)).as("norm_n"))
-    val pSide = probes.select(col(idCol).as("query_id"), col(vecCol).as("vec_q"),
-      l2Norm(col(vecCol)).as("norm_q"))
     val pairs = candidates
-      .join(cSide, "neighbor_id")
-      .join(broadcast(pSide), "query_id")
-      .withColumn("cosine_sim",
-        when(col("norm_n") * col("norm_q") > 0,
-          vecDot(col("vec_n"), col("vec_q")) / (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)))
-    graft.plans.TopKPerGroup(
-      pairs, Seq("query_id"), Seq(("cosine_sim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_sim"))
+      .join(side(corpus, idCol, vecCol, l2Norm(col(vecCol)), "neighbor_id", "n"),
+        "neighbor_id")
+      .join(broadcast(side(probes, idCol, vecCol, l2Norm(col(vecCol)), "query_id", "q")),
+        "query_id")
+      .withColumn("cosine_sim", sideCosine("n", "q"))
+    topKPerQuery(pairs, ("cosine_sim", true), k, "cosine_sim")
   }
 
   /** Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥
@@ -341,14 +326,9 @@ object Similarity {
     // verify: re-attach vectors + precomputed norms (cosine() would
     // recompute both self-dots per candidate pair).
     candidates
-      .join(base.select(col("doc_id").as("id_a"), col("vec").as("vec_a"),
-        col("norm").as("norm_a")), "id_a")
-      .join(base.select(col("doc_id").as("id_b"), col("vec").as("vec_b"),
-        col("norm").as("norm_b")), "id_b")
-      .withColumn("cosine_sim",
-        when(col("norm_a") * col("norm_b") > 0,
-          vecDot(col("vec_a"), col("vec_b")) / (col("norm_a") * col("norm_b")))
-          .otherwise(lit(0.0)))
+      .join(side(base, "doc_id", "vec", col("norm"), "id_a", "a"), "id_a")
+      .join(side(base, "doc_id", "vec", col("norm"), "id_b", "b"), "id_b")
+      .withColumn("cosine_sim", sideCosine("a", "b"))
       .filter(col("cosine_sim") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine_sim"))
   }

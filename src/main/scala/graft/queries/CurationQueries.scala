@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.exprs
-import graft.operators.{Chunking, Contamination, Multimodal, SimHashDedup}
+import graft.operators.{Chunking, Contamination, Multimodal, SimHashDedup, Similarity}
 
 /** Corpus-curation operators round 3: benchmark decontamination,
   * repetition quality signals, embedding quantization — each a one-pass
@@ -692,7 +692,6 @@ object CurationQueries {
     // accessor).
     "image_text_alignment" -> QueryDef(
       (s, dir) => {
-        import graft.functions.exprs.vecDot
         val base = Tables.documents(s, dir)
           .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"),
             col("source"), col("n_chars"))
@@ -710,12 +709,8 @@ object CurationQueries {
           .withColumn("pair_type", lit("pos"))
         val neg = img.join(txt, col("txt_id") === col("img_id") + 1)
           .withColumn("pair_type", lit("neg"))
-        val denom =
-          sqrt(vecDot(col("iv"), col("iv"))) * sqrt(vecDot(col("tv"), col("tv")))
         pos.unionByName(neg)
-          .withColumn("score",
-            when(denom > 0, vecDot(col("iv"), col("tv")) / denom)
-              .otherwise(lit(0.0)))
+          .withColumn("score", Similarity.cosine(col("iv"), col("tv")))
           .select(col("img_id"), col("txt_id"), col("pair_type"), col("score"),
             when(col("score") >= 0.8, lit(1)).otherwise(lit(0)).as("aligned"))
           .orderBy(col("pair_type"), col("img_id"))

@@ -253,6 +253,67 @@ object GraphLearnQueries {
       (g, mutual)
     })
 
+  /** DeepWalk context pairs (Perozzi et al. 2014) over the edge frame
+    * `e` (u, v): one 3-step walk per node, the "random" neighbor chosen
+    * by md5(`salt` walk:step) mod degree against a dense per-node
+    * neighbor index (row_number over sorted neighbors) — fully
+    * deterministic, so [[deepwalkSql]] replays every step. Each step is
+    * ONE equi-join on the checkpointed neighbor index keyed by the
+    * current node. Output: (walk, step, node), the (center, context)
+    * training pairs a skip-gram embedder consumes.
+    */
+  private def deepwalk(
+      e: org.apache.spark.sql.DataFrame, salt: String): org.apache.spark.sql.DataFrame = {
+    val nbr = e.select(col("u"), col("v"),
+        (row_number().over(org.apache.spark.sql.expressions.Window
+          .partitionBy(col("u")).orderBy(col("v"))) - 1)
+          .cast("long").as("idx"))
+      .localCheckpoint()
+    val deg = nbr.groupBy(col("u")).agg(count(lit(1)).as("d"))
+      .localCheckpoint()
+    var cur = deg.select(col("u").as("walk"), col("u").as("cur"))
+    val steps = (1 to 3).map { r =>
+      cur = cur
+        .join(deg, col("u") === col("cur")).drop("u")
+        .withColumn("pick",
+          Md5Hash.lower63Col(concat(lit(salt), col("walk").cast("string"),
+            lit(":"), lit(r).cast("string"))) % col("d"))
+        .join(nbr,
+          col("u") === col("cur") && col("idx") === col("pick"))
+        .select(col("walk"), col("v").as("cur"))
+      cur.select(col("walk"), lit(r).cast("int").as("step"),
+        col("cur").as("node"))
+    }
+    steps.reduce(_ unionByName _).orderBy(col("walk"), col("step"))
+  }
+
+  /** The oracle twin of [[deepwalk]] over the edge CTE `edges` (u, v):
+    * the `nbr`, `deg` and per-step CTEs, then the (walk, step, node)
+    * select.
+    */
+  private def deepwalkSql(edges: String, salt: String): String = {
+    def md5(x: String) =
+      s"(('0x' || substr(md5($x), 1, 16))::UBIGINT & 9223372036854775807::UBIGINT)::BIGINT"
+    val rounds = (1 to 3).map { r =>
+      s""",
+         |w$r AS (SELECT w.walk, nbr.v AS cur
+         |  FROM w${r - 1} w
+         |  JOIN deg ON deg.u = w.cur
+         |  JOIN nbr ON nbr.u = w.cur
+         |   AND nbr.idx = ${md5(s"'$salt' || CAST(w.walk AS VARCHAR) || ':' || $r")} % deg.d)""".stripMargin
+    }.mkString
+    s"""nbr AS MATERIALIZED (
+       |  SELECT u, v, CAST(row_number() OVER (PARTITION BY u ORDER BY v) - 1 AS BIGINT) AS idx
+       |  FROM $edges),
+       |deg AS MATERIALIZED (SELECT u, CAST(count(*) AS BIGINT) AS d FROM $edges GROUP BY 1),
+       |w0 AS (SELECT u AS walk, u AS cur FROM deg)$rounds
+       |SELECT walk, step, node FROM (
+       |  SELECT walk, 1 AS step, cur AS node FROM w1
+       |  UNION ALL SELECT walk, 2, cur FROM w2
+       |  UNION ALL SELECT walk, 3, cur FROM w3)
+       |ORDER BY walk, step""".stripMargin
+  }
+
   /** DBSCAN chain over an ε-pair frame `(i, j)` (the full directed/
     * symmetric adjacency): cores = degree ≥ 3, clusters = pointer-jump
     * CC over core-core edges (isolated cores are singletons), borders
@@ -510,61 +571,12 @@ object GraphLearnQueries {
       }),
 
     // ------------------------------------------------------------------
-    // DeepWalk context-pair generation (Perozzi et al. 2014): one
-    // 3-step walk per node over the supplier↔customer graph, the
-    // "random" neighbor chosen by md5(walk,step) mod degree against a
-    // dense per-node neighbor index (row_number over sorted
-    // neighbors) — fully deterministic, so the oracle replays every
-    // step. Emitted (walk, step, node) rows are the (center, context)
-    // training pairs a skip-gram embedder consumes. Each step is ONE
-    // equi-join on the checkpointed neighbor index keyed by current
-    // node — the distributed random-walk shape; walks never sit on
-    // the driver.
+    // DeepWalk context-pair generation ([[deepwalk]]): one 3-step walk
+    // per node over the supplier↔customer graph — the distributed
+    // random-walk shape; no walk is ever collected.
     "deepwalk_pairs" -> QueryDef(
-      (s, dir) => {
-        val e = edgesFrame(s, dir)
-        val nbr = e.select(col("u"), col("v"),
-            (row_number().over(org.apache.spark.sql.expressions.Window
-              .partitionBy(col("u")).orderBy(col("v"))) - 1)
-              .cast("long").as("idx"))
-          .localCheckpoint()
-        val deg = nbr.groupBy(col("u")).agg(count(lit(1)).as("d"))
-          .localCheckpoint()
-        var cur = deg.select(col("u").as("walk"), col("u").as("cur"))
-        val steps = (1 to 3).map { r =>
-          cur = cur
-            .join(deg, col("u") === col("cur")).drop("u")
-            .withColumn("pick",
-              Md5Hash.lower63Col(concat(lit("w:"), col("walk").cast("string"),
-                lit(":"), lit(r).cast("string"))) % col("d"))
-            .join(nbr,
-              col("u") === col("cur") && col("idx") === col("pick"))
-            .select(col("walk"), col("v").as("cur"))
-          cur.select(col("walk"), lit(r).cast("int").as("step"),
-            col("cur").as("node"))
-        }
-        steps.reduce(_ unionByName _).orderBy(col("walk"), col("step"))
-      }, {
-        def md5(x: String) =
-          s"(('0x' || substr(md5($x), 1, 16))::UBIGINT & 9223372036854775807::UBIGINT)::BIGINT"
-        val rounds = (1 to 3).map { r =>
-          s""",
-             |w$r AS (SELECT w.walk, nbr.v AS cur
-             |  FROM w${r - 1} w
-             |  JOIN deg ON deg.u = w.cur
-             |  JOIN nbr ON nbr.u = w.cur
-             |   AND nbr.idx = ${md5(s"'w:' || CAST(w.walk AS VARCHAR) || ':' || $r")} % deg.d)""".stripMargin
-        }.mkString
-        s"""WITH $edgesSql,
-           |nbr AS (SELECT u, v, CAST(row_number() OVER (PARTITION BY u ORDER BY v) - 1 AS BIGINT) AS idx FROM e),
-           |deg AS (SELECT u, CAST(count(*) AS BIGINT) AS d FROM e GROUP BY 1),
-           |w0 AS (SELECT u AS walk, u AS cur FROM deg)$rounds
-           |SELECT walk, step, node FROM (
-           |  SELECT walk, 1 AS step, cur AS node FROM w1
-           |  UNION ALL SELECT walk, 2, cur FROM w2
-           |  UNION ALL SELECT walk, 3, cur FROM w3)
-           |ORDER BY walk, step""".stripMargin
-      }),
+      (s, dir) => deepwalk(edgesFrame(s, dir), "w:"),
+      s"WITH $edgesSql,\n${deepwalkSql("e", "w:")}"),
 
     // ------------------------------------------------------------------
     // Item-item collaborative filtering (Sarwar et al. 2001; the
@@ -1941,51 +1953,18 @@ object GraphLearnQueries {
           |ORDER BY local_cc DESC, node""".stripMargin),
 
     // ------------------------------------------------------------------
-    // DeepWalk context pairs over the SEMANTIC graph — the r8
-    // deepwalk_pairs recipe (md5-routed deterministic steps against a
-    // dense per-node neighbor index) applied to the mutual-kNN graph
-    // instead of the bipartite trade fixture: the walk corpus a
-    // skip-gram embedder would train on to densify sparse semantic
-    // neighborhoods. Every node with a reciprocated neighbor starts
-    // one 3-step walk; each step is ONE equi-join on the checkpointed
-    // neighbor index keyed by the current node.
+    // DeepWalk context pairs over the SEMANTIC graph: deepwalk_pairs'
+    // walk ([[deepwalk]]) over the mutual-kNN graph instead of the
+    // bipartite trade fixture — the walk corpus a skip-gram embedder
+    // would train on to densify sparse semantic neighborhoods. Every
+    // node with a reciprocated neighbor starts one 3-step walk.
     "knn_graph_deepwalk" -> QueryDef(
       (s, dir) => {
         val mutual = knnGraph(s, dir)._2 // shared semantic graph (r14)
         val e = mutual.select(col("a").as("u"), col("b").as("v"))
           .unionByName(mutual.select(col("b").as("u"), col("a").as("v")))
-        val nbr = e.select(col("u"), col("v"),
-            (row_number().over(org.apache.spark.sql.expressions.Window
-              .partitionBy(col("u")).orderBy(col("v"))) - 1)
-              .cast("long").as("idx"))
-          .localCheckpoint()
-        val deg = nbr.groupBy(col("u")).agg(count(lit(1)).as("d"))
-          .localCheckpoint()
-        var cur = deg.select(col("u").as("walk"), col("u").as("cur"))
-        val steps = (1 to 3).map { r =>
-          cur = cur
-            .join(deg, col("u") === col("cur")).drop("u")
-            .withColumn("pick",
-              Md5Hash.lower63Col(concat(lit("s:"), col("walk").cast("string"),
-                lit(":"), lit(r).cast("string"))) % col("d"))
-            .join(nbr,
-              col("u") === col("cur") && col("idx") === col("pick"))
-            .select(col("walk"), col("v").as("cur"))
-          cur.select(col("walk"), lit(r).cast("int").as("step"),
-            col("cur").as("node"))
-        }
-        steps.reduce(_ unionByName _).orderBy(col("walk"), col("step"))
+        deepwalk(e, "s:")
       }, {
-        def md5(x: String) =
-          s"(('0x' || substr(md5($x), 1, 16))::UBIGINT & 9223372036854775807::UBIGINT)::BIGINT"
-        val rounds = (1 to 3).map { r =>
-          s""",
-             |w$r AS (SELECT w.walk, nbr.v AS cur
-             |  FROM w${r - 1} w
-             |  JOIN deg ON deg.u = w.cur
-             |  JOIN nbr ON nbr.u = w.cur
-             |   AND nbr.idx = ${md5(s"'s:' || CAST(w.walk AS VARCHAR) || ':' || $r")} % deg.d)""".stripMargin
-        }.mkString
         PipelineQueries.trainedIvfRankedCtes(
           dim = 64, nlist = 16, nprobe = 8,
           sampleSize = 10000, iters = 5, seed = 42L, probeFilter = "TRUE") +
@@ -1998,16 +1977,7 @@ object GraphLearnQueries {
              |  WHERE e1.query_id < e1.neighbor_id),
              |ge AS MATERIALIZED (SELECT a AS u, b AS v FROM mutual
              |      UNION ALL SELECT b AS u, a AS v FROM mutual),
-             |nbr AS MATERIALIZED (
-             |  SELECT u, v, CAST(row_number() OVER (PARTITION BY u ORDER BY v) - 1 AS BIGINT) AS idx
-             |  FROM ge),
-             |deg AS MATERIALIZED (SELECT u, CAST(count(*) AS BIGINT) AS d FROM ge GROUP BY 1),
-             |w0 AS (SELECT u AS walk, u AS cur FROM deg)$rounds
-             |SELECT walk, step, node FROM (
-             |  SELECT walk, 1 AS step, cur AS node FROM w1
-             |  UNION ALL SELECT walk, 2, cur FROM w2
-             |  UNION ALL SELECT walk, 3, cur FROM w3)
-             |ORDER BY walk, step""".stripMargin
+             |""".stripMargin + deepwalkSql("ge", "s:")
       }),
 
     // ------------------------------------------------------------------

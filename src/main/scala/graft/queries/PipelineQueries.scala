@@ -1065,30 +1065,21 @@ object PipelineQueries {
       cPre.crossJoin(broadcast(pPre))
         .filter(col("neighbor_id") =!= col("query_id"))
         .withColumn("pre_sim",
-          when(col("n16") * col("q16n") > 0,
-            graft.functions.exprs.vecDot(col("v16"), col("q16")) /
-              (col("n16") * col("q16n")))
-            .otherwise(lit(0.0)))
+          Similarity.cosineFromNorms(col("v16"), col("q16"), col("n16"), col("q16n")))
         .select(col("query_id"), col("neighbor_id"), col("pre_sim")),
       Seq("query_id"), Seq(("pre_sim", true), ("neighbor_id", false)), shortK)
       .select(col("query_id"), col("neighbor_id"))
     val full = emb.select(col("vec_id"), col("embedding"),
       Similarity.l2Norm(col("embedding")).as("nrm"))
     val rescored = short
-      .join(full.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("vec_n"), col("nrm").as("norm_n")), Seq("neighbor_id"))
-      .join(full.select(col("vec_id").as("query_id"),
-        col("embedding").as("vec_q"), col("nrm").as("norm_q")), Seq("query_id"))
-      .withColumn("cosine_sim",
-        when(col("norm_n") * col("norm_q") > 0,
-          graft.functions.exprs.vecDot(col("vec_n"), col("vec_q")) /
-            (col("norm_n") * col("norm_q")))
-          .otherwise(lit(0.0)))
-    graft.plans.TopKPerGroup(
+      .join(Similarity.side(full, "vec_id", "embedding", col("nrm"), "neighbor_id", "n"),
+        Seq("neighbor_id"))
+      .join(Similarity.side(full, "vec_id", "embedding", col("nrm"), "query_id", "q"),
+        Seq("query_id"))
+      .withColumn("cosine_sim", Similarity.sideCosine("n", "q"))
+    Similarity.topKPerQuery(
       rescored.select(col("query_id"), col("neighbor_id"), col("cosine_sim")),
-      Seq("query_id"), Seq(("cosine_sim", true), ("neighbor_id", false)), k)
-      .withColumnRenamed("topk_rank", "rank")
-      .select(col("query_id"), col("neighbor_id"), col("rank"))
+      ("cosine_sim", true), k)
   }
 
   /** Oracle CTE chain of the Matryoshka search up to `ranked(query_id,

@@ -497,19 +497,17 @@ object SelectionEmbedQueries {
     // hits surface as an explicit clean row, never a dropped one.
     "semantic_contamination_sweep" -> QueryDef(
       (s, dir) => {
-        import graft.functions.exprs.vecDot
         val nr = Tables.embeddings(s, dir)
           .select(col("vec_id"), col("embedding"),
-            sqrt(vecDot(col("embedding"), col("embedding"))).as("n"))
+            Similarity.l2Norm(col("embedding")).as("n"))
         val probes = nr.filter(col("vec_id") < 10)
           .select(col("vec_id").as("pid"), col("embedding").as("pv"),
             col("n").as("pn"))
           .localCheckpoint() // feeds the sweep and the all-probes frame
         val hits = nr.join(broadcast(probes), col("vec_id") =!= col("pid"))
           .select(col("pid"), col("vec_id").as("cid"),
-            when(col("pn") * col("n") > 0,
-              vecDot(col("pv"), col("embedding")) / (col("pn") * col("n")))
-              .otherwise(lit(0.0)).as("cos"))
+            Similarity.cosineFromNorms(col("pv"), col("embedding"), col("pn"), col("n"))
+              .as("cos"))
           .filter(col("cos") >= 0.30)
           .localCheckpoint() // feeds the census agg AND the top-1 window
         val agg = hits.groupBy(col("pid"))

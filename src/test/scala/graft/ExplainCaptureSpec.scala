@@ -6,21 +6,26 @@ import org.apache.spark.sql.functions._
 import graft.operators.GraphOps
 
 /** PLANS.md prints every plan through [[Explain.stable]], and its
-  * iterative sections come from [[Explain.capturePlans]]:
-  * the plans a query's actions really executed, grouped by shape. A
-  * loop step must show up as one shape run once per round.
+  * iterative sections come from [[Explain.capturePlans]]: the initial
+  * plans of the actions a query really ran, grouped by shape. A loop
+  * step must show up as one shape run once per round.
   */
 class ExplainCaptureSpec extends SparkSuite {
 
+  private lazy val bfsShapes = Explain.capturePlans(spark) { s =>
+    import s.implicits._
+    // a 12-node path, both directions: every round reaches one node
+    val path = s.range(0, 11).select(col("id").as("u"), (col("id") + 1).as("v"))
+    val edges = path.unionByName(path.select(col("v").as("u"), col("u").as("v")))
+    GraphOps.bfsHops(edges, Seq(0L).toDF("node"), rounds = 3)
+  }
+
+  private def report(shapes: Seq[Explain.PlanShape]): String =
+    shapes.map(p => s"${p.runs}x ${p.action}\n${p.plan}").mkString("\n")
+
   test("capturePlans shows bfsHops' per-round steps with their run counts") {
-    val shapes = Explain.capturePlans(spark) { s =>
-      import s.implicits._
-      // a 12-node path, both directions: every round reaches one node
-      val path = s.range(0, 11).select(col("id").as("u"), (col("id") + 1).as("v"))
-      val edges = path.unionByName(path.select(col("v").as("u"), col("u").as("v")))
-      GraphOps.bfsHops(edges, Seq(0L).toDF("node"), rounds = 3)
-    }
-    val report = shapes.map(p => s"${p.runs}x ${p.action}\n${p.plan}").mkString("\n")
+    val shapes = bfsShapes
+    val report = this.report(shapes)
     // the visited-set update: one shape, run once per round
     assert(shapes.exists(p => p.runs == 3 && p.action == "localCheckpoint" &&
       p.plan.contains("Union") && !p.plan.contains("Join")), report)
@@ -31,6 +36,15 @@ class ExplainCaptureSpec extends SparkSuite {
       expansion.map(_.runs).sum == 3, report)
     // the final noop write ran once, after the loop
     assert(shapes.last.runs == 1, report)
+  }
+
+  test("capturePlans records every adaptive plan as first planned, not as it finished") {
+    // a final adaptive plan depends on which query stage finished
+    // first, so two captures of one tree could differ
+    val adaptive = bfsShapes.filter(_.plan.contains("AdaptiveSparkPlan"))
+    assert(adaptive.nonEmpty && adaptive.forall(p =>
+      p.plan.contains("isFinalPlan=false") && !p.plan.contains("isFinalPlan=true")),
+      report(bfsShapes))
   }
 
   test("stable: one query planned twice prints two raw plans and one normalized plan") {
@@ -46,5 +60,7 @@ class ExplainCaptureSpec extends SparkSuite {
     assert(Explain.stable(s"/tmp/graft_lsh_${pid}/s, KmvSketch@6e29ff71, " +
       "M$$$Lambda$6219/0x00007f405960e490@4d40c056") ==
       "/tmp/graft_lsh_<pid>/s, KmvSketch@<hash>, M$$$Lambda@<hash>")
+    assert(Explain.stable("localCheckpoint at KnnGraph.scala:45") ==
+      "localCheckpoint at KnnGraph.scala")
   }
 }
